@@ -40,15 +40,37 @@ import scala.util.matching.Regex
   * VALUES rows, source SELECTs) are handed to Catalyst via `expr`/`sql` —
   * this router only recognizes statement SHAPE, never re-implements
   * expression parsing.
+  *
+  * A relation's schema comes from what the engine already knows, not from
+  * a footer re-read on every call: like the reference's catalog column
+  * descriptors (`Catalog/ColumnDescriptor.h:33-48`), each table version
+  * records its schema when it is written — the written frame's, or one
+  * inference for a `partition_key` layout — and every scan of it
+  * (`table`, the registered view, VERSION AS OF) passes that schema
+  * (`KnownSchema`). An INSERT appends to the current version, so it keeps
+  * its schema.
   */
 object Ddl {
 
-  private case class Managed(baseDir: String, version: Int)
+  // schemas: version → schema of every version written in this catalog
+  // (VACUUM keeps only the current one)
+  private case class Managed(baseDir: String, version: Int,
+      schemas: Map[Int, StructType]) {
+    def schema: StructType = schemas(version)
+    def withSchema(s: StructType): Managed =
+      copy(schemas = schemas.updated(version, s))
+  }
   private val catalog = new ConcurrentHashMap[String, Managed]()
 
   private lazy val root: String = Stage.scratchDir("graft_tables")
 
   private def currentPath(m: Managed) = s"${m.baseDir}/v${m.version}"
+
+  private def managed(name: String): Managed = {
+    val m = catalog.get(name)
+    require(m != null, s"table not found: $name")
+    m
+  }
 
   // ---- table-level statistics (CBO contract) --------------------------
   // The reference keys join ordering off per-table cardinalities
@@ -106,9 +128,7 @@ object Ddl {
   /** Rows (parquet-footer count, driver-side) + on-disk bytes. */
   private def computeBasicStats(spark: SparkSession, name: String)
       : TableStats = {
-    val m = catalog.get(name)
-    require(m != null, s"table not found: $name")
-    val dir = currentPath(m)
+    val dir = currentPath(managed(name))
     val prev = Option(tableStats.get(name))
     val st = TableStats(dirParquetRows(dir),
       dirParquetBytes(dir),
@@ -163,18 +183,17 @@ object Ddl {
     }
   }
 
-  private def registerView(spark: SparkSession, name: String): Unit = {
-    val m = catalog.get(name)
-    require(m != null, s"table not found: $name")
-    withStats(spark, name, spark.read.parquet(currentPath(m)))
-      .createOrReplaceTempView(name)
-  }
+  private def registerView(spark: SparkSession, name: String): Unit =
+    table(spark, name).createOrReplaceTempView(name)
 
   private def table(spark: SparkSession, name: String): DataFrame = {
-    val m = catalog.get(name)
-    require(m != null, s"table not found: $name")
-    withStats(spark, name, spark.read.parquet(currentPath(m)))
+    val m = managed(name)
+    withStats(spark, name, KnownSchema.read(spark, m.schema, currentPath(m)))
   }
+
+  /** Current version directory of a managed table. */
+  private[graft] def tablePath(name: String): String =
+    currentPath(managed(name))
 
   /** Rewrite `<table> VERSION AS OF <n>` references to temp views over
     * the pinned version directory — the time-travel read. Copy-on-write
@@ -185,14 +204,14 @@ object Ddl {
   def rewriteTimeTravel(spark: SparkSession, q: String): String =
     TimeTravelRef.replaceAllIn(q, m => {
       val (name, ver) = (m.group(1), m.group(2).toInt)
-      val mg = catalog.get(name)
-      require(mg != null, s"table not found: $name")
+      val mg = managed(name)
       val dir = Paths.get(s"${mg.baseDir}/v$ver")
-      require(Files.isDirectory(dir),
+      require(mg.schemas.contains(ver) && Files.isDirectory(dir),
         s"version $ver of $name does not exist (never written, " +
           "or removed by VACUUM)")
       val view = s"${name}__v$ver"
-      spark.read.parquet(dir.toString).createOrReplaceTempView(view)
+      KnownSchema.read(spark, mg.schemas(ver), dir.toString)
+        .createOrReplaceTempView(view)
       view
     })
 
@@ -203,16 +222,22 @@ object Ddl {
     */
   private def swapIn(spark: SparkSession, name: String, df: DataFrame): Unit = {
     invalidateMvsOver(name)
-    val prev = Option(catalog.get(name))
-    val base = prev.map(_.baseDir).getOrElse(s"$root/$name")
-    val next = prev.map(_.version + 1).getOrElse(0)
+    val m = nextVersion(name, df.schema)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val sized = if (bytes < (64L << 20)) df.coalesce(1) else df
-    sized.write.mode("overwrite").parquet(s"$base/v$next")
-    catalog.put(name, Managed(base, next))
+    sized.write.mode("overwrite").parquet(currentPath(m))
+    catalog.put(name, m)
     tableStats.remove(name) // a rewrite stales stats until re-ANALYZE
     registerView(spark, name)
   }
+
+  /** The catalog entry for the next version of `name` (v0 of a new
+    * table), whose written frame has `schema`; the caller writes it, then
+    * commits it with `catalog.put`.
+    */
+  private def nextVersion(name: String, schema: StructType): Managed =
+    Option(catalog.get(name)).map(m => m.copy(version = m.version + 1))
+      .getOrElse(Managed(s"$root/$name", 0, Map.empty)).withSchema(schema)
 
   /** HeavyDB-style table options (`Catalog/TableDescriptor.h:53-67`):
     * shard_count + shard_key → hash-repartition on the shard column
@@ -232,17 +257,21 @@ object Ddl {
       case (Some(n), None) => df.repartition(n)
       case _ => df
     }
-    val prev = Option(catalog.get(name))
-    if (prev.nonEmpty) invalidateMvsOver(name)
-    val base = prev.map(_.baseDir).getOrElse(s"$root/$name")
-    val next = prev.map(_.version + 1).getOrElse(0)
+    invalidateMvsOver(name)
+    val written = nextVersion(name, sharded.schema)
+    val path = currentPath(written)
     val writer0 = options.get("fragment_size").foldLeft(
       sharded.write.mode("overwrite"))(
       (w, fs) => w.option("maxRecordsPerFile", fs.toLong))
     val writer = options.get("partition_key").foldLeft(writer0)(
       (w, k) => w.partitionBy(k))
-    writer.parquet(s"$base/v$next")
-    catalog.put(name, Managed(base, next))
+    writer.parquet(path)
+    // a partitioned layout reads back with the key last, typed from the
+    // directory names: its schema is the one thing the frame can't give
+    catalog.put(name,
+      if (options.contains("partition_key"))
+        written.withSchema(KnownSchema.infer(spark, path))
+      else written)
     tableStats.remove(name)
     // basic stats ride along with every CTAS (the reference computes
     // fragment metadata at load; ANALYZE adds column stats on demand)
@@ -260,8 +289,7 @@ object Ddl {
     */
   def insertInto(spark: SparkSession, name: String, rows: DataFrame): Unit = {
     invalidateMvsOver(name)
-    val m = catalog.get(name)
-    require(m != null, s"table not found: $name")
+    val m = managed(name)
     val target = table(spark, name).schema
     require(rows.schema.length == target.length,
       s"INSERT arity ${rows.schema.length} != table arity ${target.length}")
@@ -601,10 +629,10 @@ object Ddl {
       if (pureAppend) {
         val newFiles = (curFiles -- files0).toSeq.sorted
         if (newFiles.isEmpty) { reRegister(); return "noop" }
-        (spark.read.schema(baseSchema).parquet(newFiles: _*), None)
+        (KnownSchema.read(spark, baseSchema, newFiles: _*), None)
       } else {
-        val old = spark.read.schema(baseSchema)
-          .parquet(files0.toSeq.sorted: _*)
+        val old =
+          KnownSchema.read(spark, baseSchema, files0.toSeq.sorted: _*)
         val cur = table(spark, bName)
         (cur.exceptAll(old), Some(old.exceptAll(cur)))
       }
@@ -748,8 +776,10 @@ object Ddl {
     """(?is)\s*INSERT\s+INTO\s+(\w+)\s+VALUES\s+(.*)""".r
   private val InsertSelect: Regex =
     """(?is)\s*INSERT\s+INTO\s+(\w+)\s+(SELECT\b.*)""".r
+  // SET and WHERE split at the top-level WHERE keyword (below), never at
+  // one inside a string literal or a subquery
   private val Update: Regex =
-    """(?is)\s*UPDATE\s+(\w+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?\s*""".r
+    """(?is)\s*UPDATE\s+(\w+)\s+SET\s+(.*)""".r
   private val Delete: Regex =
     """(?is)\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*))?\s*""".r
   // MERGE INTO — the lakehouse upsert staple (capability-add beyond
@@ -927,8 +957,7 @@ object Ddl {
 
   private def tableDetails(spark: SparkSession, name: String)
       : (String, Long, Int, Int, Long, String, Long, Int) = {
-    val m = catalog.get(name)
-    require(m != null, s"table not found: $name")
+    val m = managed(name)
     val files = {
       import scala.jdk.CollectionConverters._
       val s = Files.list(Paths.get(currentPath(m)))
@@ -1111,8 +1140,13 @@ object Ddl {
       .distinct()
 
   // ---- vector-index registry + helpers --------------------------------
+  // schema: the cid-partitioned layout's, inferred once at CREATE (ADMIT
+  // appends the same columns)
   private case class VecIdx(dir: String, srcTable: String, idCol: String,
-      vecCol: String)
+      vecCol: String, schema: StructType) {
+    def scan(spark: SparkSession): DataFrame =
+      KnownSchema.read(spark, schema, dir)
+  }
   private val vecIndexes = new ConcurrentHashMap[String, VecIdx]()
 
   private def vecIdx(name: String): VecIdx = {
@@ -1185,7 +1219,8 @@ object Ddl {
         val dir = Stage.scratchDir("vecidx_ddl")
         operators.AnnIvf.assignVectors(sourceDf(spark, src), idCol, vecCol)
           .write.mode("overwrite").partitionBy("cid").parquet(dir)
-        vecIndexes.put(name.toLowerCase, VecIdx(dir, src, idCol, vecCol))
+        vecIndexes.put(name.toLowerCase,
+          VecIdx(dir, src, idCol, vecCol, KnownSchema.infer(spark, dir)))
         import spark.implicits._
         Some(Seq((name, dir)).toDF("index_name", "index_dir"))
       case AlterVecIndexAdmit(name, src, idCol, vecCol) =>
@@ -1195,7 +1230,7 @@ object Ddl {
         // idempotent: drop ids already present, checking ONLY the
         // batch's own cell partitions (partition-pruned read)
         val cells = cellsOf(assigned)
-        val existing = spark.read.parquet(ix.dir)
+        val existing = ix.scan(spark)
           .filter(col("cid").isin(cells: _*)).select(col("vec_id"))
         assigned.join(existing, Seq("vec_id"), "left_anti")
           .write.mode("append").partitionBy("cid").parquet(ix.dir)
@@ -1214,7 +1249,7 @@ object Ddl {
         // per SHOW statement.
         val rows = vecIndexes.asScala.toSeq.sortBy(_._1).map {
           case (name, ix) =>
-            val files = spark.read.parquet(ix.dir).inputFiles.toSeq
+            val files = ix.scan(spark).inputFiles.toSeq
             val nCells = files
               .flatMap(f => "cid=-?\\d+".r.findFirstIn(f))
               .distinct.size.toLong
@@ -1239,7 +1274,7 @@ object Ddl {
           explode(operators.AnnIvf.probeCellsExpr(col("p_cid")))
             .as("cid"))
         val cells = cellsOf(probeCells)
-        val cand = spark.read.parquet(ix.dir)
+        val cand = ix.scan(spark)
           .filter(col("cid").isin(cells: _*))
           .join(probeCells, "cid")
           .filter(col("vec_id") =!= col("p_id"))
@@ -1399,22 +1434,31 @@ object Ddl {
         mergeInto(spark, name, srcDf, onCond, updates,
           Option(del).isDefined, ins)
         done
-      case Update(name, sets, where) =>
+      case Update(name, rest) =>
+        val wi = HeavyEngine.topLevelIndexOf(rest, "WHERE", 0)
+        val (sets, where) =
+          if (wi < 0) (rest, None)
+          else (rest.substring(0, wi), Some(rest.substring(wi + 5).trim))
         val assignments = splitTop(sets).map { a =>
           val Array(k, v) = a.split("=", 2)
           (k.trim, v.trim)
         }
-        update(spark, name, assignments, Option(where)); done
+        update(spark, name, assignments, where); done
       case Delete(name, where) =>
         delete(spark, name, Option(where)); done
       case Drop(name) =>
         dropTable(spark, name); done
       // DUMP/RESTORE (`Parser/ParserNode.h:1442/:1453`): archive = the
       // table's current version as parquet at the given path.
+      // An archive this session dumped restores with its recorded schema;
+      // any other is inferred once per file state (`KnownSchema.of`).
       case DumpTable(name, path) =>
-        table(spark, name).write.mode("overwrite").parquet(path); done
+        val df = table(spark, name)
+        df.write.mode("overwrite").parquet(path)
+        KnownSchema.remember(spark, path, df.schema); done
       case RestoreTable(name, path) =>
-        swapIn(spark, name, spark.read.parquet(path)); done
+        swapIn(spark, name,
+          KnownSchema.read(spark, KnownSchema.of(spark, path), path)); done
       // OPTIMIZE (`TableOptimizer.h:38`): compact small files — rewrite
       // the current version with right-sized partitions. Sizing comes
       // from the optimizer's statistics (parquet footer metadata), not
@@ -1485,8 +1529,7 @@ object Ddl {
         Some(Seq((name, n, df.schema.length))
           .toDF("table_name", "n_rows", "n_cols"))
       case VacuumTable(name) =>
-        val m = catalog.get(name)
-        require(m != null, s"table not found: $name")
+        val m = managed(name)
         val keep = s"v${m.version}"
         val removed = {
           import scala.jdk.CollectionConverters._
@@ -1503,6 +1546,7 @@ object Ddl {
           }
           old.length.toLong
         }
+        catalog.put(name, m.copy(schemas = Map(m.version -> m.schema)))
         import spark.implicits._
         Some(Seq((name, removed, keep)).toDF(
           "table_name", "n_versions_removed", "current_version"))

@@ -156,6 +156,40 @@ object HeavyEngine {
   private val ExplainForm =
     """(?is)\s*EXPLAIN\s+(OPTIMIZED|CALCITE|PLAN)\s+(.*)""".r
 
+  /** Index of keyword `word` (any case) in `q` at or after `from`,
+    * at the top level only — never inside parentheses or a '...' string
+    * literal (a doubled '' stays inside it) — or -1. The match must be a
+    * whole word: '_' (so `order_rank`/`limit_val` never parse as
+    * ORDER/LIMIT keywords) and quoted-identifier delimiters (an adjacent
+    * '"'/'`' means the match sits inside a quoted name) count as word
+    * characters.
+    */
+  private[graft] def topLevelIndexOf(q: String, word: String,
+      from: Int): Int = {
+    def isWordChar(c: Char): Boolean =
+      Character.isLetterOrDigit(c) || c == '_' || c == '"' || c == '`'
+    var depth = 0; var inStr = false; var i = from
+    while (i < q.length) {
+      val c = q.charAt(i)
+      if (inStr) {
+        if (c == '\'' && i + 1 < q.length && q.charAt(i + 1) == '\'')
+          i += 1
+        else if (c == '\'') inStr = false
+      }
+      else if (c == '\'') inStr = true
+      else if (c == '(') depth += 1
+      else if (c == ')') depth -= 1
+      else if (depth == 0 &&
+        q.regionMatches(true, i, word, 0, word.length) &&
+        (i == 0 || !isWordChar(q.charAt(i - 1))) &&
+        (i + word.length >= q.length ||
+          !isWordChar(q.charAt(i + word.length))))
+        return i
+      i += 1
+    }
+    -1
+  }
+
   /** QUALIFY support (dialect sugar, DuckDB/Snowflake-style): split
     * `<select> QUALIFY <pred> [ORDER BY ...|LIMIT ...]` at the
     * top level (never inside parens or string literals). The predicate
@@ -165,41 +199,12 @@ object HeavyEngine {
     */
   private[graft] def splitQualify(q: String)
       : Option[(String, String, String)] = {
-    val up = q.toUpperCase
-    // Identifier characters for the word-boundary test: '_' (so
-    // `order_rank`/`limit_val` never parse as ORDER/LIMIT keywords) and
-    // quoted-identifier delimiters (an adjacent '"'/'`' means the match
-    // sits inside a quoted name, not at a keyword boundary).
-    def isWordChar(c: Char): Boolean =
-      Character.isLetterOrDigit(c) || c == '_' || c == '"' || c == '`'
-    def topLevelIndexOf(word: String, from: Int): Int = {
-      var depth = 0; var inStr = false; var i = from
-      while (i < q.length) {
-        val c = q.charAt(i)
-        if (inStr) {
-          // SQL-escaped quote '' stays inside the literal.
-          if (c == '\'' && i + 1 < q.length && q.charAt(i + 1) == '\'')
-            i += 1
-          else if (c == '\'') inStr = false
-        }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && up.startsWith(word, i) &&
-          (i == 0 || !isWordChar(q.charAt(i - 1))) &&
-          (i + word.length >= q.length ||
-            !isWordChar(q.charAt(i + word.length))))
-          return i
-        i += 1
-      }
-      -1
-    }
-    val qi = topLevelIndexOf("QUALIFY", 0)
+    val qi = topLevelIndexOf(q, "QUALIFY", 0)
     if (qi < 0) None
     else {
       val afterPred = {
-        val ob = topLevelIndexOf("ORDER", qi + 7)
-        val li = topLevelIndexOf("LIMIT", qi + 7)
+        val ob = topLevelIndexOf(q, "ORDER", qi + 7)
+        val li = topLevelIndexOf(q, "LIMIT", qi + 7)
         Seq(ob, li).filter(_ >= 0).minOption.getOrElse(q.length)
       }
       Some((q.substring(0, qi).trim,

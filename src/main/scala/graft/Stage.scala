@@ -73,6 +73,10 @@ object Stage {
 
   /** Materialize df as parquet under the session staging root and return
     * a scan of it; an identical (session, name, plan) is staged once.
+    * The scan takes its schema from the frame just written, not from a
+    * footer re-read (`KnownSchema`, after the reference's catalog-typed
+    * columns, `Catalog/ColumnDescriptor.h`): a stage costs its write
+    * job(s) and nothing else.
     */
   def apply(df: DataFrame, name: String): DataFrame = synchronized {
     val plan = df.queryExecution.analyzed
@@ -85,7 +89,7 @@ object Stage {
         val t0 = System.nanoTime()
         df.write.mode("overwrite").parquet(dir)
         buildNanos.addAndGet(System.nanoTime() - t0)
-        val out = df.sparkSession.read.parquet(dir)
+        val out = KnownSchema.read(df.sparkSession, df.schema, dir)
         cache.put(key, Entry(plan, out) :: entries)
         out
     }

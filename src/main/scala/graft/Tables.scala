@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB these would be partitioned/bucketed managed tables; the read
   * path (columnar scan, predicate pushdown, column pruning) is identical.
+  *
+  * A relation's schema comes from what the engine already knows, not from
+  * a footer re-read on every call — the reference takes column types from
+  * its catalog (`Catalog/ColumnDescriptor.h:33-48`). Each fixture file is
+  * inferred once per session and file state (`KnownSchema.of`); every
+  * later `t` scans it with that schema and runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -35,7 +41,8 @@ object Tables {
     // otherwise read default confs.
     SparkSession.setActiveSession(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = KnownSchema.read(spark, KnownSchema.of(spark, path), path)
     if (name == "events") {
       df.schema("ts").dataType match {
         // ns-int64 generation: integer `div`, NOT `/` — ns epoch values
@@ -55,8 +62,8 @@ object Tables {
 
   /** Register every fixture table as a temp view (for spark.sql queries).
     * Idempotent while the session keeps pointing at the same dir —
-    * repeated calls don't re-read 10 parquet footers each time — but a
-    * dir switch (test fixtures vs sf dirs) re-registers.
+    * repeated calls don't rebuild 10 views each time — but a dir switch
+    * (test fixtures vs sf dirs) re-registers.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     val key = System.identityHashCode(spark).toString

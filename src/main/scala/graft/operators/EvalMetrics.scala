@@ -114,8 +114,10 @@ object EvalMetrics {
         .withColumn("lrank", rank().over(wRank))
         .withColumn("peers", count(lit(1)).over(
           Window.partitionBy(col("pid"), col("score")))), "q345_local")
-      val cnt = local.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-        .collect().sortBy(_.getInt(0)) // bounded: one row per partition
+      val cnt = graft.Bounded.collectCapped(
+          local.groupBy(col("pid")).agg(count(lit(1)).as("c")), 8,
+          "q345 per-partition row counts (one row per range partition)")
+        .sortBy(_.getInt(0))
       val off = cnt.scanLeft((0, 0L)) { case ((_, acc), r) =>
         (r.getInt(0), acc + r.getLong(1)) }
       val offDf = off.init.zip(off.tail)

@@ -85,7 +85,7 @@ object MLFunctions {
     // the core-core edge set, the label loop, and border attachment.
     val pairsPath = graft.Stage.scratchDir("dbscan_pairs")
     pairs.write.mode("overwrite").parquet(pairsPath)
-    val pairsS = spark.read.parquet(pairsPath)
+    val pairsS = graft.KnownSchema.read(spark, pairs.schema, pairsPath)
 
     val core = pairsS.groupBy(col("aid")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= minObs).select(col("aid").as("id"))
@@ -95,7 +95,7 @@ object MLFunctions {
       .select(col("aid"), col("bid"))
     val edgesPath = graft.Stage.scratchDir("dbscan_edges")
     coreEdges.write.mode("overwrite").parquet(edgesPath)
-    val edges = spark.read.parquet(edgesPath)
+    val edges = graft.KnownSchema.read(spark, coreEdges.schema, edgesPath)
 
     // Clusters = connected components of the core-core epsilon graph
     // (pointer-jumping min-label, O(log diameter) rounds).

@@ -1201,10 +1201,12 @@ object Attribution {
       def r12(x: Double): Double =
         new java.math.BigDecimal(java.lang.Double.toString(x))
           .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-      val trans = p.collect()
+      val trans = graft.Bounded.collectCapped(p, 4096,
+          "q541 event-type transition matrix (≤|types|² rows)")
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2))
-      val entry = starts.collect()
+      val entry = graft.Bounded.collectCapped(starts, 64,
+          "q541 entry distribution (≤|types| rows)")
         .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
       val srcs = trans.map(_._1).distinct.sorted.toSeq
       val chs = srcs :+ "none"

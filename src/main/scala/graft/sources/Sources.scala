@@ -73,7 +73,7 @@ object Sources {
         base.write.mode("overwrite")
           .option("parquet.enable.dictionary", dictEnable.toString)
           .parquet(dir)
-        s.read.parquet(dir)
+        graft.KnownSchema.read(s, base.schema, dir)
           .agg(
             count(when(col("p_type").like("%BRASS%"), 1)).as("n_like"),
             count(when(col("p_type").ilike("%brass%"), 1)).as("n_ilike"),

@@ -317,6 +317,22 @@ class DdlSpec extends AnyFunSuite {
     eng.sql("DROP TABLE t_all")
   }
 
+  test("UPDATE splits SET from WHERE at the top-level keyword, not at a " +
+      "WHERE inside a string literal or subquery") {
+    val eng = HeavyEngine(spark, sf)
+    eng.sql("DROP TABLE IF EXISTS t_upd_lit")
+    eng.sql("CREATE TABLE t_upd_lit (k BIGINT, s STRING)")
+    eng.sql("INSERT INTO t_upd_lit VALUES (1, 'x'), (2, 'y')")
+    eng.sql("UPDATE t_upd_lit SET s = 'a WHERE b' WHERE k = 1")
+    eng.sql("""UPDATE t_upd_lit SET s = 'q where' || (SELECT 'z' WHERE
+               1 = 1) where k = 2""")
+    eng.sql("UPDATE t_upd_lit SET s = s || ' where'")
+    val got = eng.sql("SELECT k, s FROM t_upd_lit ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got == Seq((1L, "a WHERE b where"), (2L, "q wherez where")))
+    eng.sql("DROP TABLE t_upd_lit")
+  }
+
   test("CREATE FUNCTION lifecycle: create, call, replace, list, drop") {
     val eng = HeavyEngine(spark, sf)
     eng.sql("DROP FUNCTION IF EXISTS double_it")

@@ -31,6 +31,22 @@ class BoundedSpec extends AnyFunSuite {
       .map(_.length) == Some(5))
     assert(Bounded.collectBounded(spark.range(100).toDF("id"), 16).isEmpty)
   }
+
+  test("q541 fails loudly, naming its domain, when the event-type " +
+      "transition matrix outgrows the driver-side fixed point") {
+    // 100 event types in a hashed order: ~8k distinct transitions, past
+    // the 4096-row cap of the (≤|types|²) matrix
+    val dir = Stage.scratchDir("bounded_q541")
+    spark.range(20000).select((col("id") % 40).as("user_id"),
+        timestamp_seconds(col("id")).as("ts"), col("id").as("event_id"),
+        concat(lit("t"), pmod(hash(col("id")), lit(100))).as("event_type"))
+      .write.parquet(s"$dir/events.parquet")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("q541_markov_attribution")(spark, dir)
+    }
+    assert(e.getMessage.contains("q541 event-type transition matrix"))
+    assert(e.getMessage.contains("bounded-metadata cap (4096 rows)"))
+  }
 }
 
 class CcEpochSpec extends AnyFunSuite {
