@@ -62,14 +62,7 @@ object Bench {
     lazy val defaultBudget = math.max(780.0, 1.9 * SparkEntry.queries.size)
     val budget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SECS")
       .map(_.toDouble).getOrElse(defaultBudget)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Stage.scratchDir("warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // Focused re-benchmark (regression checks): run only these queries
     // and skip the committed BENCH artifacts, which must always reflect
     // full sweeps.

@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (against the registered fixture views + extension functions) →
   * optimize → whole-stage-codegen'd execution.
   *
-  * Construction registers (once per session):
+  * Construction registers (the functions and rules once per session,
+  * see `prepare`):
   *  - every fixture table as a temp view (`Tables.registerAll`);
   *  - the full extension-function surface — quarterday, week_sunday/
   *    week_saturday, truncate, sample_ratio, jarowinkler_similarity,
@@ -213,13 +214,32 @@ object HeavyEngine {
     }
   }
 
+  /** Sessions whose extension functions and optimizer rules are in
+    * place. Weak keys, so a dropped session is not pinned.
+    */
+  private val prepared =
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
+
+  /** The one per-session set-up: registers the extension functions and
+    * installs the optimizer rules exactly once per session. Holding the
+    * lock until the set-up is done means a second thread constructing an
+    * engine on the same fresh session waits for it instead of running
+    * SQL before the functions exist.
+    */
+  private def prepare(spark: SparkSession): Unit = prepared.synchronized {
+    if (!prepared.containsKey(spark)) {
+      functions.GraftFunctions.registerAll(spark)
+      functions.GeoFunctions.registerAll(spark)
+      operators.Models.register(spark)
+      spark.experimental.extraOptimizations ++= Seq(
+        plans.GeoRangeJoinRule(spark), plans.MvRewrite.MvRewriteRule(spark))
+      prepared.put(spark, true)
+    }
+  }
+
   /** Engine over `spark` with the fixture tables at `dir` registered. */
   def apply(spark: SparkSession, dir: String): HeavyEngine = {
-    functions.GraftFunctions.registerAll(spark)
-    functions.GeoFunctions.registerAll(spark)
-    operators.Models.register(spark)
-    plans.GeoRangeJoinRule.install(spark)
-    plans.MvRewrite.install(spark)
+    prepare(spark)
     Tables.registerAll(spark, dir)
     new HeavyEngine(spark)
   }

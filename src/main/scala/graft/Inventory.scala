@@ -1,6 +1,8 @@
 package graft
 
-/** Prints the registered query inventory (count + sorted names).
+/** Prints the registered query inventory: one header line
+  * `count=<queries> oracles=<oracle texts> sql_bodies=<queries whose
+  * oracle text is their only implementation>`, then the sorted names.
   *
   * Round-close gate tooling: the round-8 verdict required the closing
   * sweep / plan audit to cover exactly `SparkEntry.queries.size`
@@ -10,7 +12,8 @@ package graft
 object Inventory {
   def main(args: Array[String]): Unit = {
     val names = SparkEntry.queries.keys.toSeq.sorted
-    println(s"count=${names.size} oracles=${SparkEntry.oracleSql.size}")
+    println(s"count=${names.size} oracles=${SparkEntry.oracleSql.size} " +
+      s"sql_bodies=${SparkEntry.sqlBodied.size}")
     names.foreach(println)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc statement-level timing probe for the DDL-lifecycle queries
   * (round-13 optimization scratch tool; not part of the query surface).
@@ -11,14 +10,7 @@ object OptProbe {
     val sfDir = args(0)
     val which = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Stage.scratchDir("warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus, "ERROR")
     val eng = HeavyEngine(spark, sfDir)
     def tsql(label: String, q: String): Unit = {
       val t0 = System.nanoTime()

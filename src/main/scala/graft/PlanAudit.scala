@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-shape audit across every registered query: prints per-query
   * counts of shuffles, broadcasts, nested loops, and sort-merge joins so
@@ -11,14 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Stage.scratchDir("warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("8", "ERROR")
     def count(s: String, what: String): Int =
       what.r.findAllIn(s).length
     println(f"${"query"}%-28s shuf bcast bnlj cart smj scan")

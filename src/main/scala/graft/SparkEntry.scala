@@ -1,13 +1,25 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The registered query surface (SURVEY.md §7).
   *
   * `queries` aggregates every implemented operator's named query;
   * `oracleSql` carries the DuckDB-dialect equivalent for the hash-compare
   * correctness gate (omitted for non-SQL-expressible ops → rows-only check).
+  *
+  * One rule joins the two: an oracle key with no hand-written body runs
+  * its oracle text through the engine's SQL front door,
+  * `(s, d) => HeavyEngine(s, d).sql(<oracle text>)` — the reference has
+  * one query entry point, SQL text handed to `sql_execute`
+  * (`ThriftHandler/DBHandler.cpp:1285`). The same text then runs on Spark
+  * and on DuckDB, so changing such a query means editing its oracle
+  * string, and that string must stay valid in both dialects. A module
+  * keeps a DataFrame body only where the body is the feature under test
+  * (Stage, driver-side values, graft operators, sources, streaming, ML,
+  * DDL, or an approximate or arbitrary-value aggregate whose oracle can
+  * only emit a literal or another aggregate in its place) or has a
+  * measured advantage, noted next to it.
   */
 object SparkEntry {
 
@@ -117,9 +129,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_agg_basic")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val all = modules.flatMap(_._1)
+  /** Queries whose oracle text is their only implementation. */
+  lazy val sqlBodied: Set[String] =
+    oracleSql.keySet -- modules.flatMap(_._1).map(_._1)
+
+  /** One entry per implemented operator from SURVEY.md §2: the
+    * hand-written bodies plus, for every `sqlBodied` key, its oracle
+    * text through `HeavyEngine.sql`. Building the map starts no Spark.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val all = modules.flatMap(_._1) ++ sqlBodied.toSeq.sorted.map { name =>
+      val text = oracleSql(name)
+      name -> ((s: SparkSession, d: String) => HeavyEngine(s, d).sql(text))
+    }
     require(all.map(_._1).distinct.size == all.size,
       "duplicate query ids: " + all.groupBy(_._1).collect {
         case (k, vs) if vs.size > 1 => k
@@ -129,6 +151,6 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     modules.flatMap(_._2).toMap
 }

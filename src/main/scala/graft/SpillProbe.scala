@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Spill-not-grow probe (round-12; VERDICT r11 #5). Runs one
   * SparkEntry query in THIS JVM with a deliberately bounded execution
@@ -25,17 +24,10 @@ object SpillProbe {
   def main(args: Array[String]): Unit = {
     val (name, sfDir) = (args(0), args(1))
     val forceEvery = if (args.length > 2) args(2) else "20000"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", forceEvery)
-      .config("spark.sql.warehouse.dir", Stage.scratchDir("warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("4", extra = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> forceEvery))
     val spill = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {

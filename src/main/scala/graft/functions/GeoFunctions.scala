@@ -252,16 +252,8 @@ object GeoFunctions {
   def st_dfully_within(a: Column, b: Column, r: Column): Column =
     st_max_distance(a, b) <= r
 
-  // Same per-session idempotency guard as GraftFunctions.registerAll.
-  private val registeredSessions: java.util.Set[org.apache.spark.sql.SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-          java.lang.Boolean]()))
-
   /** Register the geometry functions for SQL use. */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     val reg = spark.sessionState.functionRegistry

@@ -145,18 +145,7 @@ object GraftFunctions {
       })
   }
 
-  // Idempotency guard: registerAll is invoked by every HeavyEngine()
-  // construction; re-registering the same names spams
-  // `SimpleFunctionRegistry … replaced a previously registered function`
-  // warnings on each session. Weak keys so dropped sessions don't pin.
-  private val registeredSessions: java.util.Set[org.apache.spark.sql.SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-          java.lang.Boolean]()))
-
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     val reg = spark.sessionState.functionRegistry

@@ -689,44 +689,6 @@ object Mining {
         .orderBy(col("event_type"))
     }),
 
-    // Decision-tree best-split finder — the inner loop of tree
-    // training (q93/q157's fitted trees) exposed as a first-class
-    // operator: Gini gain of every threshold over the bounded integer
-    // feature domain, from ONE cumulative pass over the 50-row
-    // value-grouped class counts. Top-5 thresholds. At 100 TB this is
-    // exactly how a distributed tree library evaluates splits:
-    // value-histogram aggregation, then driver-sized threshold math.
-    "q415_best_split" -> ((s, d) => {
-      val rows = t(s, d, "lineitem").select(
-        floor(col("l_quantity")).cast("long").as("v"),
-        when(col("l_extendedprice") > 38000.0, 1L).otherwise(0L).as("y"))
-      val byVal = rows.groupBy(col("v"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      val wCum = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = byVal
-        .withColumn("nl", sum(col("n")).over(wCum))
-        .withColumn("pl", sum(col("pos")).over(wCum))
-        .crossJoin(broadcast(byVal.agg(sum(col("n")).as("nt"),
-          sum(col("pos")).as("pt"))))
-        .filter(col("nl") < col("nt")) // both sides non-empty
-      def gini(p: org.apache.spark.sql.Column,
-               n: org.apache.spark.sql.Column) = {
-        val f = p.cast("double") / n
-        lit(1.0) - f * f - (lit(1.0) - f) * (lit(1.0) - f)
-      }
-      cum.select(col("v").as("threshold"), col("nl").as("n_left"),
-          (gini(col("pt"), col("nt"))
-            - col("nl") / col("nt").cast("double")
-              * gini(col("pl"), col("nl"))
-            - (col("nt") - col("nl")) / col("nt").cast("double")
-              * gini(col("pt") - col("pl"), col("nt") - col("nl")))
-            .as("gain"))
-        .select(col("threshold"), col("n_left"),
-          round(col("gain"), 6).as("gini_gain"))
-        .orderBy(col("gini_gain").desc, col("threshold")).limit(5)
-    }),
-
     // Market-basket association rules — support / confidence (both
     // directions) / lift for event-type pairs within (user, day)
     // baskets, all in exact integer ppm/milli. Baskets distinct first
@@ -805,6 +767,13 @@ object Mining {
                 len::BIGINT AS win_len, c::BIGINT AS win_count,
                 round(llr, 4) AS llr
          FROM best WHERE rn = 1 ORDER BY event_type""",
+    // Decision-tree best-split finder — the inner loop of tree
+    // training (q93/q157's fitted trees) exposed as a first-class
+    // operator: Gini gain of every threshold over the bounded integer
+    // feature domain, from ONE cumulative pass over the 50-row
+    // value-grouped class counts. Top-5 thresholds. At 100 TB this is
+    // exactly how a distributed tree library evaluates splits:
+    // value-histogram aggregation, then driver-sized threshold math.
     "q415_best_split" ->
       """WITH rows_ AS (
            SELECT floor(l_quantity)::BIGINT AS v,
@@ -1231,31 +1200,6 @@ object Behavior {
 
   val queries: Seq[(String, Q)] = Seq(
 
-    "q472_subsequence_count" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-      val wU = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val wBefore = wU.rowsBetween(Window.unboundedPreceding, -1)
-      val wAfter = wU.rowsBetween(1, Window.unboundedFollowing)
-      val counted = ev
-        .withColumn("s_before", coalesce(sum(
-          when(col("event_type") === "signup", 1L).otherwise(0L))
-          .over(wBefore), lit(0L)))
-        .withColumn("p_after", coalesce(sum(
-          when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .over(wAfter), lit(0L)))
-        .filter(col("event_type") === "click")
-        .select(col("user_id"),
-          (col("s_before") * col("p_after")).as("triples"))
-      counted.groupBy((col("user_id") % 10).as("cohort"))
-        .agg(sum(col("triples")).as("funnel_instances"),
-          count(lit(1)).as("n_clicks"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort"))
-    }),
-
     "q473_brand_cooccurrence" -> ((s, d) => {
       // Staged once: deg + both self-join sides otherwise re-run the
       // 3-table join + distinct three times per materialization.
@@ -1286,38 +1230,6 @@ object Behavior {
         .orderBy(col("cosine_milli").desc, col("ba"), col("bb"))
         .limit(15)
     }),
-
-    "q474_anova_f" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .select(dayofweek(col("ts")).as("dow"), col("value"))
-      val grp = ev.groupBy(col("dow"))
-        .agg(sum(col("value")).as("gs"), count(lit(1)).as("gn"))
-      val tot = grp.agg(sum(col("gs")).as("ts_"), sum(col("gn")).as("tn"),
-        count(lit(1)).as("k"))
-      val ssw = ev.groupBy(col("dow"))
-        .agg(sum(col("value") * col("value")).as("gss"),
-          sum(col("value")).as("gs"), count(lit(1)).as("gn"))
-        .select((col("gss") - col("gs") * col("gs") / col("gn"))
-          .as("ssw_g"))
-        .agg(sum(col("ssw_g")).as("ssw"))
-      val ssb = grp.crossJoin(broadcast(tot))
-        .select((col("gs") * col("gs") / col("gn")).as("term"),
-          col("ts_"), col("tn"), col("k"))
-        .groupBy(col("ts_"), col("tn"), col("k"))
-        .agg(sum(col("term")).as("sum_term"))
-        .select(col("k"), col("tn"),
-          (col("sum_term") - col("ts_") * col("ts_") / col("tn"))
-            .as("ssb"))
-      ssb.crossJoin(broadcast(ssw))
-        .select(col("k"), col("tn").as("n"),
-          floor(col("ssb") * 100).cast("long").as("ssb_centi"),
-          floor(col("ssw") * 100).cast("long").as("ssw_centi"),
-          floor(lit(1000.0) * (col("ssb") / (col("k") - 1)) /
-            (col("ssw") / (col("tn") - col("k")))).cast("long")
-            .as("f_milli"),
-          floor(lit(1000000.0) * col("ssb") / (col("ssb") + col("ssw")))
-            .cast("long").as("eta2_ppm"))
-    })
   )
 
   val oracles: Seq[(String, String)] = Seq(

@@ -176,33 +176,6 @@ object DataOps {
           (col("n_probe") - col("bloom_pass")) / col("n_probe"), 4))
     }),
 
-    // Join-size estimation from per-key group statistics — the
-    // cardinality stats a planner consults BEFORE running a join (the
-    // reference sizes hash tables from expression ranges and needs
-    // exactly these counts). |A self-join on k| = sum c(k)^2, computed
-    // from one aggregate over the fact table; the key histogram also
-    // yields the skew diagnostics (max key count, top-key fraction)
-    // that drive the salted-join decision (q154/q237). No join is
-    // executed: at 100 TB this one-pass estimate is what tells you the
-    // self-join would explode BEFORE you pay for it.
-    "q268_join_size_estimate" -> ((s, d) => {
-      val cnt = t(s, d, "lineitem").groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("c"))
-      val dimKeys = t(s, d, "part").filter(col("p_type") === "ECONOMY")
-        .select(col("p_partkey").as("k")).distinct()
-      val withDim = cnt.join(broadcast(dimKeys),
-        col("l_partkey") === col("k"), "left")
-      withDim.agg(
-        count(lit(1)).as("n_keys"),
-        sum(col("c")).as("total_rows"),
-        max(col("c")).as("max_key_cnt"),
-        sum(col("c") * col("c")).as("est_selfjoin_pairs"),
-        sum(when(col("k").isNotNull, col("c")).otherwise(0L))
-          .as("est_dimjoin_rows"))
-        .withColumn("skew_frac",
-          round(col("max_key_cnt") / col("total_rows"), 6))
-    }),
-
     // ROUGE-1/2 between paired documents (candidate = even doc_id,
     // reference = the next doc) — exact n-gram multiset overlap
     // (sum of min counts), precision/recall/F1. Tokenization is the
@@ -315,39 +288,6 @@ object DataOps {
       manifest(raw, "raw")
         .unionByName(manifest(deduped, "deduped"))
         .unionByName(manifest(curated, "curated"))
-    }),
-
-    // Incremental aggregate maintenance: per-customer order counts and
-    // revenue as base (< 1997) + delta (>= 1997) partial aggregates
-    // merged by re-aggregation, PROVEN equal to the full recompute.
-    // Amounts aggregate as DECIMAL(18,2) so the merge is exact — the
-    // float-sum order-dependence that normally breaks MV refresh
-    // equality is designed out, in both engines. mism_total (cross-
-    // joined 1-row audit) must be 0. At 100 TB: the delta is today's
-    // partition; the base aggregate is storage, not compute.
-    "q259_incremental_mv" -> ((s, d) => {
-      val o = t(s, d, "orders")
-        .select(col("o_custkey"), col("o_orderdate"),
-          col("o_totalprice").cast("decimal(18,2)").as("tp"))
-      val cut = lit("1997-01-01").cast("timestamp")
-      def agg0(df: DataFrame): DataFrame =
-        df.groupBy(col("o_custkey"))
-          .agg(count(lit(1)).as("cnt"), sum(col("tp")).as("tot"))
-      val merged = agg0(o.filter(col("o_orderdate") < cut))
-        .unionByName(agg0(o.filter(col("o_orderdate") >= cut)))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("cnt")).as("n_orders"), sum(col("tot")).as("tot"))
-      val full = agg0(o).select(col("o_custkey"),
-        col("cnt").as("f_cnt"), col("tot").as("f_tot"))
-      val mism = merged.join(full, Seq("o_custkey"), "full_outer")
-        .agg(sum(when(col("n_orders").isNull || col("f_cnt").isNull ||
-          col("n_orders") =!= col("f_cnt") || col("tot") =!= col("f_tot"),
-          1L).otherwise(0L)).as("mism_total"))
-      merged.crossJoin(broadcast(mism))
-        .select(col("o_custkey"), col("n_orders"),
-          round(col("tot").cast("double"), 2).as("total"), col("mism_total"))
-        .orderBy(col("total").desc, col("o_custkey").asc)
-        .limit(20)
     }),
 
     // Column encoding advisor — the sizing pass behind the reference's
@@ -550,6 +490,15 @@ object DataOps {
                 round((count(*) - sum(CASE WHEN bloom_pass THEN 1 ELSE 0
                   END)) / count(*), 4) AS pruned_frac
          FROM flags""",
+    // Join-size estimation from per-key group statistics — the
+    // cardinality stats a planner consults BEFORE running a join (the
+    // reference sizes hash tables from expression ranges and needs
+    // exactly these counts). |A self-join on k| = sum c(k)^2, computed
+    // from one aggregate over the fact table; the key histogram also
+    // yields the skew diagnostics (max key count, top-key fraction)
+    // that drive the salted-join decision (q154/q237). No join is
+    // executed: at 100 TB this one-pass estimate is what tells you the
+    // self-join would explode BEFORE you pay for it.
     "q268_join_size_estimate" ->
       """WITH cnt AS (
            SELECT l_partkey, count(*)::BIGINT AS c FROM lineitem
@@ -670,6 +619,14 @@ object DataOps {
          SELECT 'deduped', count(*)::BIGINT, bit_xor(h) FROM deduped
          UNION ALL
          SELECT 'curated', count(*)::BIGINT, bit_xor(h) FROM curated""",
+    // Incremental aggregate maintenance: per-customer order counts and
+    // revenue as base (< 1997) + delta (>= 1997) partial aggregates
+    // merged by re-aggregation, PROVEN equal to the full recompute.
+    // Amounts aggregate as DECIMAL(18,2) so the merge is exact — the
+    // float-sum order-dependence that normally breaks MV refresh
+    // equality is designed out, in both engines. mism_total (cross-
+    // joined 1-row audit) must be 0. At 100 TB: the delta is today's
+    // partition; the base aggregate is storage, not compute.
     "q259_incremental_mv" ->
       """WITH o AS (
            SELECT o_custkey, o_orderdate,

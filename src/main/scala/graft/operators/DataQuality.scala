@@ -92,32 +92,6 @@ object DataQuality {
             / (col("exp_p") * col("n")), 6).as("chi2_term"))
     }),
 
-    // Fellegi-Sunter record-linkage scoring over blocked candidate
-    // pairs: adjacent part ids form the candidate block (the q63
-    // shape); three field comparisons (brand equality, type equality,
-    // container size band) each contribute a log-likelihood match
-    // weight in exact milli-units (literal m/u weights), and the total
-    // weight decides link / possible / non-link at literal thresholds.
-    // The probabilistic-linkage decision rule, integer-exact.
-    "q350_fellegi_sunter" -> ((s, d) => {
-      val p = t(s, d, "part")
-      val pairs = p.as("a").join(p.as("b"),
-        col("b.p_partkey") === col("a.p_partkey") + 1)
-      val wBrand = when(col("a.p_brand") === col("b.p_brand"), 2197L)
-        .otherwise(-1204L)    // ln(m/u) * 1000 literals
-      val wType = when(col("a.p_type") === col("b.p_type"), 3466L)
-        .otherwise(-511L)
-      val wSize = when(abs(col("a.p_size") - col("b.p_size")) <= 2,
-        1386L).otherwise(-693L)
-      pairs.select(col("a.p_partkey").as("a_key"),
-          col("b.p_partkey").as("b_key"),
-          (wBrand + wType + wSize).as("weight_milli"))
-        .withColumn("decision",
-          when(col("weight_milli") >= 4000L, "link")
-            .when(col("weight_milli") >= 0L, "possible")
-            .otherwise("non_link"))
-    }),
-
     // Top navigation paths: each user's first five event types (by
     // time) joined into a path string, then the top-10 paths by
     // frequency — the product-analytics "common journeys" report. The
@@ -206,6 +180,13 @@ object DataQuality {
                 round(pow(c.obs - e.exp_p * (SELECT n FROM nn), 2)
                   / (e.exp_p * (SELECT n FROM nn)), 6) AS chi2_term
          FROM counts c JOIN e ON e.digit = c.digit""",
+    // Fellegi-Sunter record-linkage scoring over blocked candidate
+    // pairs: adjacent part ids form the candidate block (the q63
+    // shape); three field comparisons (brand equality, type equality,
+    // container size band) each contribute a log-likelihood match
+    // weight in exact milli-units (literal m/u weights), and the total
+    // weight decides link / possible / non-link at literal thresholds.
+    // The probabilistic-linkage decision rule, integer-exact.
     "q350_fellegi_sunter" ->
       """SELECT a.p_partkey AS a_key, b.p_partkey AS b_key,
                 (CASE WHEN a.p_brand = b.p_brand THEN 2197

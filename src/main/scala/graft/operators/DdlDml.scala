@@ -165,45 +165,6 @@ object DdlDml {
                  FROM merge_tgt GROUP BY st""")
     }),
 
-    // QUALIFY clause (dialect sugar the modern engines ship;
-    // HeavyEngine.splitQualify): filter on a window rank without a
-    // subquery — top-2 orders per customer. DuckDB runs the SAME text
-    // natively, so the oracle IS the query.
-    "q297_qualify_clause" -> ((s, d) => {
-      val eng = HeavyEngine(s, d)
-      eng.sql("""SELECT o_custkey, o_orderkey, o_totalprice,
-                        row_number() OVER (PARTITION BY o_custkey
-                          ORDER BY o_totalprice DESC, o_orderkey) AS rn
-                 FROM orders
-                 QUALIFY rn <= 2
-                 ORDER BY o_custkey, rn LIMIT 100""")
-    }),
-
-    // WITH RECURSIVE through the engine (Spark 4's UnionLoop): bounded
-    // 3-hop path enumeration over the event-transition graph — the
-    // SQL-standard recursion the reference's Calcite layer parses but
-    // its engine lacks; DuckDB replays the same recursion natively.
-    // (The operator-level BFS siblings are q53/q137; this is the SQL
-    // surface over the same graph.)
-    "q298_recursive_cte" -> ((s, d) => {
-      val eng = HeavyEngine(s, d)
-      eng.sql("""WITH RECURSIVE reach(node, hops) AS (
-                   SELECT 'signup' AS node, 0 AS hops
-                   UNION ALL
-                   SELECT e.dst, r.hops + 1
-                   FROM reach r
-                   JOIN (SELECT DISTINCT src, dst FROM (
-                           SELECT event_type AS src,
-                                  lead(event_type) OVER (
-                                    PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS dst
-                           FROM events)
-                         WHERE dst IS NOT NULL) e ON e.src = r.node
-                   WHERE r.hops < 3)
-                 SELECT node, count(*) AS n_paths, min(hops) AS first_hop
-                 FROM reach GROUP BY node""")
-    }),
-
     // Materialized-view aggregate navigation (plans/MvRewrite.scala):
     // a (returnflag, linestatus) MV answers the coarser returnflag
     // roll-up by re-aggregating its partial sums/counts/extrema — the
@@ -814,6 +775,10 @@ object DdlDml {
          SELECT st, count(*)::BIGINT AS n, sum(k)::BIGINT AS ksum,
                 round(sum(tp), 2) AS tpsum
          FROM merged GROUP BY st""",
+    // QUALIFY clause (dialect sugar the modern engines ship;
+    // HeavyEngine.splitQualify): filter on a window rank without a
+    // subquery — top-2 orders per customer. DuckDB runs the SAME text
+    // natively, so the oracle IS the query.
     "q297_qualify_clause" ->
       """SELECT o_custkey, o_orderkey, o_totalprice,
                 row_number() OVER (PARTITION BY o_custkey
@@ -821,6 +786,12 @@ object DdlDml {
          FROM orders
          QUALIFY rn <= 2
          ORDER BY o_custkey, rn LIMIT 100""",
+    // WITH RECURSIVE through the engine (Spark 4's UnionLoop): bounded
+    // 3-hop path enumeration over the event-transition graph — the
+    // SQL-standard recursion the reference's Calcite layer parses but
+    // its engine lacks; DuckDB replays the same recursion natively.
+    // (The operator-level BFS siblings are q53/q137; this is the SQL
+    // surface over the same graph.)
     "q298_recursive_cte" ->
       """WITH RECURSIVE reach(node, hops) AS (
            SELECT 'signup' AS node, 0 AS hops

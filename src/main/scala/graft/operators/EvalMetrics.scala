@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.t
@@ -160,28 +160,6 @@ object EvalMetrics {
             ) DIV (n * n - (a1 * b1 + (n - a1) * (n - b1)))""")
             .as("kappa_ppm"))
     }),
-
-    // Gini coefficient of revenue concentration per order status —
-    // G = (2·Σ i·xᵢ − (n+1)·Σx) / (n·Σx) over ascending-sorted exact
-    // cents. Σ i·x stays an exact long (≤ ~10¹⁵), so the one double
-    // division is deterministic; rounded to 6. Partitioned by status
-    // (group-parallel); the global form is the q345 scan pattern.
-    "q346_gini_lorenz" -> ((s, d) => {
-      val w = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("cents").asc, col("o_orderkey").asc)
-      t(s, d, "orders")
-        .select(col("o_orderstatus"), col("o_orderkey"),
-          floor(col("o_totalprice") * 100).cast("long").as("cents"))
-        .withColumn("i", row_number().over(w).cast("long"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"),
-          sum(col("i") * col("cents")).as("six"))
-        .select(col("o_orderstatus"), col("n"),
-          round((lit(2.0) * col("six").cast("double")
-            - (col("n") + 1).cast("double") * col("s").cast("double"))
-            / (col("n").cast("double") * col("s").cast("double")), 6)
-            .as("gini"))
-    })
   )
 
   val oracles: Seq[(String, String)] = Seq(
@@ -289,6 +267,11 @@ object EvalMetrics {
                   // (n * n - (a1 * b1 + (n - a1) * (n - b1))))::BIGINT
                   AS kappa_ppm
          FROM agg""",
+    // Gini coefficient of revenue concentration per order status —
+    // G = (2·Σ i·xᵢ − (n+1)·Σx) / (n·Σx) over ascending-sorted exact
+    // cents. Σ i·x stays an exact long (≤ ~10¹⁵), so the one double
+    // division is deterministic; rounded to 6. Partitioned by status
+    // (group-parallel); the global form is the q345 scan pattern.
     "q346_gini_lorenz" ->
       """WITH c AS (
            SELECT o_orderstatus, o_orderkey,

@@ -21,41 +21,6 @@ object Experimentation {
 
   val queries: Seq[(String, Q)] = Seq(
 
-    // CUPED variance reduction (Deng et al. 2013) — the experiment-
-    // sensitivity standard: per user, Y = second-half purchase cents,
-    // X = first-half (pre-period) cents; theta = cov(X,Y)/var(X) from
-    // explicit sums, adjusted Y' = Y - theta (X - mean X), and the
-    // variance-reduction ratio 1 - var(Y')/var(Y) (= corr^2). One
-    // user-keyed aggregate, then scalar algebra on a single stats row.
-    "q395_cuped" -> ((s, d) => {
-      val per = t(s, d, "events")
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg(
-          sum(when(col("ts") < "2024-01-16",
-            floor(col("value") * 100).cast("long")).otherwise(0L))
-            .cast("double").as("x"),
-          sum(when(col("ts") >= "2024-01-16",
-            floor(col("value") * 100).cast("long")).otherwise(0L))
-            .cast("double").as("y"))
-      per.agg(count(lit(1)).cast("double").as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"),
-          sum(col("x") * col("y")).as("sxy"))
-        .select(col("n").cast("long").as("n_users"),
-          round((col("n") * col("sxy") - col("sx") * col("sy"))
-            / (col("n") * col("sxx") - col("sx") * col("sx")), 4)
-            .as("theta"),
-          round(lit(1.0) -
-            (lit(1.0) -
-              (col("n") * col("sxy") - col("sx") * col("sy"))
-              * (col("n") * col("sxy") - col("sx") * col("sy"))
-              / ((col("n") * col("sxx") - col("sx") * col("sx"))
-                 * (col("n") * col("syy") - col("sy") * col("sy")))),
-            4).as("var_reduction"))
-    }),
-
     // Quantile treatment effects — A/B deciles compared at matched
     // order statistics (rank k = ceil(d n / 10), the ExactSelection
     // contract), showing WHERE in the distribution a treatment moves
@@ -201,6 +166,12 @@ object Experimentation {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // CUPED variance reduction (Deng et al. 2013) — the experiment-
+    // sensitivity standard: per user, Y = second-half purchase cents,
+    // X = first-half (pre-period) cents; theta = cov(X,Y)/var(X) from
+    // explicit sums, adjusted Y' = Y - theta (X - mean X), and the
+    // variance-reduction ratio 1 - var(Y')/var(Y) (= corr^2). One
+    // user-keyed aggregate, then scalar algebra on a single stats row.
     "q395_cuped" ->
       """WITH per AS (
            SELECT user_id,
@@ -1160,32 +1131,6 @@ object Venn {
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Seq[(String, Q)] = Seq(
-
-    "q538_segment_venn" -> ((s, d) => {
-      val seg = t(s, d, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("sa"),
-          max(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("sb"),
-          max(when(col("event_type") === "error", 1L).otherwise(0L))
-            .as("sc"))
-      seg.agg(count(lit(1)).as("n_users"),
-        sum(col("sa")).as("a"), sum(col("sb")).as("b"),
-        sum(col("sc")).as("c"),
-        sum(col("sa") * col("sb")).as("ab"),
-        sum(col("sa") * col("sc")).as("ac"),
-        sum(col("sb") * col("sc")).as("bc"),
-        sum(col("sa") * col("sb") * col("sc")).as("abc"),
-        sum(when(col("sa") + col("sb") + col("sc") > 0, 1L)
-          .otherwise(0L)).as("union_direct"))
-        .select(col("n_users"), col("a"), col("b"), col("c"),
-          col("ab"), col("ac"), col("bc"), col("abc"),
-          col("union_direct"),
-          (col("a") + col("b") + col("c") - col("ab") - col("ac")
-            - col("bc") + col("abc")).as("union_incl_excl"))
-    }),
 
     "q539_dkw_certificate" -> ((s, d) => {
       val base = t(s, d, "orders").select(

@@ -17,21 +17,6 @@ object FlightsParity {
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Seq[(String, Q)] = Seq(
-    // Q001-style: bare count.
-    "q114_fl_count" -> ((s, d) =>
-      t(s, d, "events").agg(count(lit(1)).as("n"))),
-
-    // Q002-style: filtered count (predicate must push to the scan).
-    "q115_fl_filtered_count" -> ((s, d) =>
-      t(s, d, "events").filter(col("value") > 50.0)
-        .agg(count(lit(1)).as("n"))),
-
-    // Q005-style flagship: avg(metric) by month bucket.
-    "q116_fl_avg_by_month" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_trunc("month", col("ts")).as("mon"))
-        .agg(avg(col("value")).as("avg_value"))),
-
     // Q-style: count by (carrier, dayofweek extract).
     "q117_fl_carrier_dow" -> ((s, d) =>
       t(s, d, "events")
@@ -50,27 +35,6 @@ object FlightsParity {
           avg(length(col("props"))).as("avg_w"),
           avg(col("value") + length(col("props"))).as("avg_vw"))),
 
-    // Q012/Q016: the dashboard scatter panel — a timestamp-range filter
-    // with per-carrier avg x / avg y / count size.
-    "q274_fl_dashboard" -> ((s, d) =>
-      t(s, d, "events")
-        .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
-          col("ts") < lit("2024-01-22 00:00:00").cast("timestamp"))
-        .groupBy(col("event_type").as("key0"))
-        .agg(avg(col("value")).as("x"),
-          avg(length(col("props"))).as("y"),
-          count(lit(1)).as("size"))),
-
-    // Q011: selective filter + raw projection with LIMIT (the record
-    // inspector). The reference's limit is orderless; the parity query
-    // pins (ts, event_id) order so the hash gate is deterministic.
-    "q275_fl_projection_limit" -> ((s, d) =>
-      t(s, d, "events")
-        .filter(col("event_type") === "error" && col("value") > 30.0)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .orderBy(col("ts"), col("event_id"))
-        .limit(5000)),
-
     // Q014: the month x ISO-day-of-week heatmap under a range filter.
     "q276_fl_month_isodow" -> ((s, d) =>
       t(s, d, "events")
@@ -82,10 +46,13 @@ object FlightsParity {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // Q001-style: bare count.
     "q114_fl_count" ->
       """SELECT count(*) AS n FROM events""",
+    // Q002-style: filtered count (predicate must push to the scan).
     "q115_fl_filtered_count" ->
       """SELECT count(*) AS n FROM events WHERE value > 50.0""",
+    // Q005-style flagship: avg(metric) by month bucket.
     "q116_fl_avg_by_month" ->
       """SELECT date_trunc('month', ts::TIMESTAMP)::TIMESTAMP AS mon,
                 avg(value) AS avg_value
@@ -102,6 +69,8 @@ object FlightsParity {
                 avg(length(props)) AS avg_w,
                 avg(value + length(props)) AS avg_vw
          FROM events GROUP BY 1, 2""",
+    // Q012/Q016: the dashboard scatter panel — a timestamp-range filter
+    // with per-carrier avg x / avg y / count size.
     "q274_fl_dashboard" ->
       """SELECT event_type AS key0, avg(value) AS x,
                 avg(length(props)) AS y, count(*)::BIGINT AS size
@@ -109,6 +78,9 @@ object FlightsParity {
          WHERE ts::TIMESTAMP >= TIMESTAMP '2024-01-08 00:00:00'
            AND ts::TIMESTAMP < TIMESTAMP '2024-01-22 00:00:00'
          GROUP BY 1""",
+    // Q011: selective filter + raw projection with LIMIT (the record
+    // inspector). The reference's limit is orderless; the parity query
+    // pins (ts, event_id) order so the hash gate is deterministic.
     "q275_fl_projection_limit" ->
       """SELECT event_id, user_id, ts::TIMESTAMP AS ts, value
          FROM events

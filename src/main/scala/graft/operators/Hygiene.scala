@@ -78,35 +78,6 @@ object Hygiene {
           expr("dropped * 1000000 DIV n_events"))
         .orderBy(col("event_type"))
     }),
-
-    "q480_order_reconciliation" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(floor(col("l_extendedprice") *
-            (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))
-            * 100).cast("long")).as("computed_cents"))
-      t(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          floor(col("o_totalprice") * 100).cast("long")
-            .as("stated_cents"))
-        .join(li, col("o_orderkey") === col("l_orderkey"), "left")
-        .withColumn("drift",
-          abs(coalesce(col("computed_cents"), lit(0L)) -
-            col("stated_cents")))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(when(col("computed_cents").isNull, 1L).otherwise(0L))
-            .as("no_lines"),
-          sum(when(col("drift") <= 100 &&
-            col("computed_cents").isNotNull, 1L).otherwise(0L))
-            .as("matched"),
-          sum(when(col("drift") > 100 &&
-            col("computed_cents").isNotNull, 1L).otherwise(0L))
-            .as("mismatched"),
-          max(when(col("computed_cents").isNotNull, col("drift")))
-            .as("max_drift_cents"))
-        .orderBy(col("o_orderpriority"))
-    })
   )
 
   val oracles: Seq[(String, String)] = Seq(

@@ -841,65 +841,6 @@ object Econ {
 
   val queries: Seq[(String, Q)] = Seq(
 
-    "q475_price_elasticity" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .join(t(s, d, "part"), col("l_partkey") === col("p_partkey"))
-        .filter(col("l_quantity") > 0)
-        .select(col("p_brand").as("brand"),
-          log(col("l_extendedprice") / col("l_quantity")).as("x"),
-          log(col("l_quantity").cast("double")).as("y"))
-      li.groupBy(col("brand"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"))
-        .filter(col("n") >= 10)
-        .select(col("brand"), col("n"),
-          floor(lit(1000.0) *
-            (col("n") * col("sxy") - col("sx") * col("sy")) /
-            (col("n") * col("sxx") - col("sx") * col("sx")))
-            .cast("long").as("elasticity_milli"))
-        .orderBy(col("brand"))
-    }),
-
-    "q476_ipf_raking" -> ((s, d) => {
-      val cells = t(s, d, "events")
-        .groupBy(col("event_type"), hour(col("ts")).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val tot = cells.agg(sum(col("n")).as("total"),
-        countDistinct(col("event_type")).as("nt"),
-        countDistinct(col("hr")).as("nh"))
-      // uniform targets: every row margin total/nt, col margin total/nh
-      var w = cells.crossJoin(broadcast(tot))
-        .withColumn("w", lit(1.0))
-      for (_ <- 1 to 2) {
-        // row sweep: scale each event_type so its weighted mass hits
-        // the row target (bounded window over the 120-cell table)
-        val rowSum = w.groupBy(col("event_type").as("rt"))
-          .agg(sum(col("w") * col("n")).as("rmass"))
-        w = w.join(broadcast(rowSum), col("event_type") === col("rt"))
-          .withColumn("w", col("w") *
-            (col("total") / col("nt")) / col("rmass"))
-          .drop("rt", "rmass")
-        val colSum = w.groupBy(col("hr").as("ch"))
-          .agg(sum(col("w") * col("n")).as("cmass"))
-        w = w.join(broadcast(colSum), col("hr") === col("ch"))
-          .withColumn("w", col("w") *
-            (col("total") / col("nh")) / col("cmass"))
-          .drop("ch", "cmass")
-      }
-      // report per-type margin error after the sweeps
-      w.groupBy(col("event_type"))
-        .agg(sum(col("n")).as("raw_n"),
-          floor(sum(col("w") * col("n")) * 1000).cast("long")
-            .as("raked_mass_milli"),
-          floor(max(col("w")) * 1000000).cast("long")
-            .as("max_weight_micro"),
-          floor(min(col("w")) * 1000000).cast("long")
-            .as("min_weight_micro"))
-        .orderBy(col("event_type"))
-    }),
-
     "q477_shapley_attribution" -> ((s, d) => {
       val spark = s
       import spark.implicits._

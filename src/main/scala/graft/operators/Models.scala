@@ -305,14 +305,7 @@ object Models {
     * the expression tree at ANALYSIS time — queries carry the model as
     * plan, not as a runtime lookup.
     */
-  // Same per-session idempotency guard as GraftFunctions.registerAll.
-  private val registeredSessions: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
   def register(spark: SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
     import org.apache.spark.sql.graftbridge.ColumnBridge

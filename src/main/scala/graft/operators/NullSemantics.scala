@@ -35,48 +35,6 @@ object NullSemantics {
         .otherwise(col("l_returnflag")).as("flag"))
 
   val queries: Seq[(String, Q)] = Seq(
-    // Aggregate null-skipping + null group key (GROUP BY collects nulls
-    // into one group in both engines).
-    "q90_null_aggregates" -> ((s, d) => {
-      nulled(s, d).groupBy(col("flag"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("q")).as("n_q"),
-          count_distinct(col("q")).as("nd_q"),
-          sum(col("q")).as("sum_q"),
-          avg(col("q")).as("avg_q"),
-          min(col("q")).as("min_q"),
-          max(col("q")).as("max_q"))
-    }),
-
-    // Scalar null propagation: arithmetic, comparisons inside CASE,
-    // COALESCE/NULLIF, null-safe equality.
-    "q91_null_scalars" -> ((s, d) => {
-      nulled(s, d).select(
-        col("l_orderkey"), col("l_linenumber"),
-        (col("q") + col("disc")).as("add_n"),
-        (col("q") * lit(0)).as("mul_zero"),
-        coalesce(col("q"), col("disc"), lit(-1.0)).as("coal"),
-        nullif(col("flag"), lit("R")).as("nif"),
-        when(col("q") > 25, "hi").when(col("q") <= 25, "lo")
-          .otherwise("null_q").as("case_path"),
-        (col("q") <=> col("disc")).as("nse"),
-        col("q").isNull.as("q_is_null"))
-    }),
-
-    // Empty-relation aggregate semantics: global aggregates over zero
-    // rows yield one row (count=0, sum/avg/min/max NULL); grouped
-    // aggregates yield zero rows.
-    "q103_empty_relation" -> ((s, d) => {
-      val none = t(s, d, "lineitem").filter(lit(false))
-      none.agg(
-        count(lit(1)).as("n"),
-        sum(col("l_quantity")).as("s"),
-        avg(col("l_quantity")).as("a"),
-        min(col("l_quantity")).as("mn"),
-        max(col("l_quantity")).as("mx"),
-        count_distinct(col("l_returnflag")).as("nd"))
-    }),
-
     // Join null-key semantics: null keys never match (inner), survive as
     // unmatched (left); count both.
     "q92_null_join_keys" -> ((s, d) => {
@@ -94,6 +52,8 @@ object NullSemantics {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // Aggregate null-skipping + null group key (GROUP BY collects nulls
+    // into one group in both engines).
     "q90_null_aggregates" ->
       """WITH n AS (
            SELECT CASE WHEN l_orderkey % 3 = 0 THEN NULL
@@ -105,6 +65,8 @@ object NullSemantics {
                 count(DISTINCT q)::BIGINT AS nd_q, sum(q) AS sum_q,
                 avg(q) AS avg_q, min(q) AS min_q, max(q) AS max_q
          FROM n GROUP BY flag""",
+    // Scalar null propagation: arithmetic, comparisons inside CASE,
+    // COALESCE/NULLIF, null-safe equality.
     "q91_null_scalars" ->
       """SELECT l_orderkey, l_linenumber,
                 q + disc AS add_n,
@@ -123,6 +85,9 @@ object NullSemantics {
                       CASE WHEN l_linenumber % 4 = 0 THEN NULL
                            ELSE l_returnflag END AS flag
                FROM lineitem)""",
+    // Empty-relation aggregate semantics: global aggregates over zero
+    // rows yield one row (count=0, sum/avg/min/max NULL); grouped
+    // aggregates yield zero rows.
     "q103_empty_relation" ->
       """SELECT count(*) AS n, sum(l_quantity) AS s,
                 avg(l_quantity) AS a, min(l_quantity) AS mn,

@@ -26,48 +26,6 @@ object OpsAnalytics {
 
   val queries: Seq[(String, Q)] = Seq(
 
-    // k-fold cross-validation (the eval loop a training pipeline runs
-    // before committing to a model): 5 deterministic hash-folds over
-    // lineitem, per-fold OLS of extendedprice ~ quantity fit on the
-    // OTHER four folds via closed-form leave-fold-out sums (total sums
-    // minus the fold's own — ONE corpus scan for all five models, a
-    // 5-row broadcast back, then per-row residuals aggregated per
-    // fold). No per-fold re-scan, no MLlib iteration: at 100 TB this
-    // is one pass + one 5-row join regardless of k.
-    "q372_kfold_cv" -> ((s, d) => {
-      val rows = t(s, d, "lineitem").select(
-        (knuth(col("l_orderkey") * 10 + col("l_linenumber")) % 5)
-          .cast("long").as("fold"),
-        col("l_quantity").cast("double").as("x"),
-        col("l_extendedprice").cast("double").as("y"))
-      val perFold = rows.groupBy(col("fold")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("x") * col("y")).as("sxy"))
-      val tot = perFold.agg(sum(col("n")).as("tn"), sum(col("sx")).as("tsx"),
-        sum(col("sy")).as("tsy"), sum(col("sxx")).as("tsxx"),
-        sum(col("sxy")).as("tsxy"))
-      val coef = perFold.crossJoin(broadcast(tot)).select(col("fold"),
-        ((col("tn") - col("n")) * (col("tsxy") - col("sxy"))
-          - (col("tsx") - col("sx")) * (col("tsy") - col("sy"))).as("num"),
-        ((col("tn") - col("n")) * (col("tsxx") - col("sxx"))
-          - (col("tsx") - col("sx")) * (col("tsx") - col("sx"))).as("den"),
-        (col("tn") - col("n")).as("ntr"),
-        (col("tsx") - col("sx")).as("mx_n"),
-        (col("tsy") - col("sy")).as("my_n"))
-        .select(col("fold"), (col("num") / col("den")).as("slope"),
-          ((col("my_n") - col("num") / col("den") * col("mx_n"))
-            / col("ntr")).as("icept"))
-      rows.join(broadcast(coef), "fold")
-        .select(col("fold"),
-          (col("y") - col("slope") * col("x") - col("icept")).as("r"))
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n_test"),
-          round(sqrt(avg(col("r") * col("r"))), 4).as("rmse"))
-        .orderBy(col("fold"))
-    }),
-
     // Event-sequence perplexity under a first-order Markov model — the
     // sequence analogue of q247's unigram surprise: global transition
     // probabilities with add-one smoothing over the event-type
@@ -239,47 +197,6 @@ object OpsAnalytics {
         .orderBy(col("q_id"))
     }),
 
-    // t-closeness — the third rung of the privacy-gate ladder
-    // (q317 k-anonymity, q361 l-diversity): per quasi-identifier class,
-    // the earth-mover distance between the class's ORDERED sensitive
-    // distribution (acctbal bands) and the global one, EMD computed by
-    // the ordered-attribute closed form sum|cumdiff| / (m-1). The class
-    // x band grid is dimension-sized (25 nations x 5 segments x ~11
-    // bands), so every window runs over bounded rows.
-    "q378_t_closeness" -> ((s, d) => {
-      val cust = t(s, d, "customer").select(col("c_nationkey"),
-        col("c_mktsegment"),
-        floor(col("c_acctbal") / 1000).cast("long").as("band"))
-      val bands = cust.select(col("band")).distinct()
-      val nBands = bands.agg(count(lit(1)).as("m"))
-      val glob = cust.groupBy(col("band")).agg(count(lit(1)).as("gc"))
-        .crossJoin(broadcast(cust.agg(count(lit(1)).as("gn"))))
-        .select(col("band"), (col("gc").cast("double") / col("gn"))
-          .as("p_glob"))
-      val classes = cust.groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"))
-      val cls = cust.groupBy(col("c_nationkey"), col("c_mktsegment"),
-        col("band")).agg(count(lit(1)).as("c"))
-      val grid = classes.crossJoin(broadcast(bands))
-        .join(cls, Seq("c_nationkey", "c_mktsegment", "band"), "left")
-        .na.fill(0L, Seq("c"))
-        .join(broadcast(glob), "band")
-        .select(col("c_nationkey"), col("c_mktsegment"), col("band"),
-          col("n"),
-          (col("c").cast("double") / col("n") - col("p_glob")).as("diff"))
-      val wCum = Window.partitionBy(col("c_nationkey"), col("c_mktsegment"))
-        .orderBy(col("band"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      grid.withColumn("cum", sum(col("diff")).over(wCum))
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(first(col("n")).as("n"), sum(abs(col("cum"))).as("s"))
-        .crossJoin(broadcast(nBands))
-        .select(col("c_nationkey"), col("c_mktsegment"), col("n"),
-          round(col("s") / (col("m") - 1), 4).as("emd"))
-        .filter(col("emd") > 0.25)
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))
-    }),
-
     // Weight-of-evidence encoding + information value — the credit-
     // scoring feature transform (per-category ln(P(cat|pos)/P(cat|neg))
     // with 0.5 smoothing) that turns a high-cardinality categorical
@@ -287,6 +204,8 @@ object OpsAnalytics {
     // category dimension; totals ride a broadcast. The class totals are
     // +1-smoothed too so an all-one-class label (possible at tiny scale
     // factors) stays defined instead of dividing by zero.
+    // Kept over its oracle SQL: through the engine the SQL rounds a
+    // decimal quotient before ln, one unit off DuckDB on some seeds.
     "q379_woe_encoding" -> ((s, d) => {
       val rows = t(s, d, "part").select(col("p_brand"),
         when(col("p_retailprice") > 950.0, 1L).otherwise(0L).as("y"))
@@ -305,44 +224,6 @@ object OpsAnalytics {
               / ((col("n") - col("pos") + 0.5) / col("neg_tot"))), 4)
             .as("iv_term"))
         .orderBy(col("p_brand"))
-    }),
-
-    // Data-contract assertion report — the great-expectations-style
-    // gate an ingest pipeline runs before publishing a table: seven
-    // declarative contracts over lineitem evaluated in ONE scan of
-    // conditional counts, unpivoted to a (contract, checked,
-    // violations, pass) report. One contract is designed to fail
-    // (qty <= 45) so the report provably detects violations.
-    "q380_data_contracts" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val agg = li.agg(count(lit(1)).as("n"),
-        sum(when(!col("l_quantity").between(1, 50), 1L).otherwise(0L))
-          .as("v_qty"),
-        sum(when(!col("l_discount").between(0.0, 0.1), 1L).otherwise(0L))
-          .as("v_disc"),
-        sum(when(col("l_shipdate") < "1992-01-01" ||
-          col("l_shipdate") >= "1999-01-01", 1L)
-          .otherwise(0L)).as("v_ship"),
-        sum(when(!col("l_returnflag").isin("A", "N", "R"), 1L)
-          .otherwise(0L)).as("v_flag"),
-        sum(when(col("l_extendedprice") <= 0, 1L).otherwise(0L))
-          .as("v_price"),
-        sum(when(col("l_orderkey").isNull || col("l_partkey").isNull, 1L)
-          .otherwise(0L)).as("v_null"),
-        sum(when(col("l_quantity") > 45, 1L).otherwise(0L)).as("v_qty45"))
-      agg.selectExpr("n",
-        """stack(7,
-             'qty_in_1_50', v_qty,
-             'discount_in_0_0.1', v_disc,
-             'shipdate_in_range', v_ship,
-             'returnflag_domain', v_flag,
-             'price_positive', v_price,
-             'keys_not_null', v_null,
-             'qty_le_45_expected_fail', v_qty45)
-           AS (contract, n_violations)""")
-        .select(col("contract"), col("n").as("n_checked"),
-          col("n_violations"), (col("n_violations") === 0).as("pass"))
-        .orderBy(col("contract"))
     }),
 
     // Blocking-quality audit for record linkage — the metrics that
@@ -419,34 +300,6 @@ object OpsAnalytics {
         .orderBy(col("event_type"))
     }),
 
-    // Population-stability-index drift — the model-monitoring standard
-    // q210's TVD complements: PSI = sum (p2-p1) ln(p2/p1) over
-    // fixed-width value bins between the observation window's first
-    // and second half, Laplace-smoothed so empty bins stay finite. One
-    // scan, a (type x 10 bin) aggregate; PSI > 0.2 is the
-    // retrain-the-model alarm convention.
-    "q383_psi_drift" -> ((s, d) => {
-      val binned = t(s, d, "events").select(col("event_type"),
-        (col("ts") >= "2024-01-16").as("late"),
-        least(floor(col("value") / 40), lit(9L)).cast("long").as("bin"))
-      val cells = binned.groupBy(col("event_type"), col("bin"))
-        .agg(sum(when(!col("late"), 1L).otherwise(0L)).as("c1"),
-          sum(when(col("late"), 1L).otherwise(0L)).as("c2"))
-      val tots = cells.groupBy(col("event_type"))
-        .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-      cells.join(tots, "event_type")
-        .select(col("event_type"), col("n1"), col("n2"),
-          (((col("c1") + 0.5) / (col("n1") + 5.0))
-            ).as("p1"),
-          (((col("c2") + 0.5) / (col("n2") + 5.0))
-            ).as("p2"))
-        .groupBy(col("event_type"))
-        .agg(first(col("n1")).as("n_early"), first(col("n2")).as("n_late"),
-          round(sum((col("p2") - col("p1")) * log(col("p2") / col("p1"))),
-            4).as("psi"))
-        .orderBy(col("event_type"))
-    }),
-
     // Per-document content novelty — the "how much NEW text does each
     // source contribute" curve that decides ingest priority: a doc's
     // distinct 5-gram hashes (q188's portable md5-prefix recipe) are
@@ -491,6 +344,9 @@ object OpsAnalytics {
     // pairs unpivot from that single row; correlations use the explicit
     // closed form so neither engine's corr() implementation detail
     // leaks into the gate.
+    // Kept over its oracle SQL: 90 vs 157 ms warm at sf0.1 (median, 5 of
+    // 5 runs); the body unpivots one aggregate row with stack, the SQL
+    // plans six UNION ALL branches over the sums.
     "q385_corr_matrix" -> ((s, d) => {
       val li = t(s, d, "lineitem").select(
         col("l_quantity").cast("double").as("q"),
@@ -745,29 +601,6 @@ object OpsAnalytics {
         .orderBy(col("covered_tok").desc, col("doc_id")).limit(20)
     }),
 
-    // Exact weighted percentiles over a BOUNDED value domain — revenue-
-    // weighted quantity quantiles via the value-grouped cumulative-
-    // weight walk (the domain is the group key, so the cumulative
-    // window runs over <=50 rows regardless of corpus size; unbounded
-    // domains take the ExactSelection refinement instead). All-integer:
-    // weights in cents, thresholds by ceil half/9-tenths comparisons.
-    "q393_weighted_percentile" -> ((s, d) => {
-      val byVal = t(s, d, "lineitem")
-        .select(floor(col("l_quantity")).cast("long").as("v"),
-          floor(col("l_extendedprice") * 100).cast("long").as("wt"))
-        .groupBy(col("v")).agg(sum(col("wt")).as("w"))
-      val wCum = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = byVal.withColumn("cw", sum(col("w")).over(wCum))
-        .crossJoin(broadcast(byVal.agg(sum(col("w")).as("tw"))))
-      cum.agg(
-        min(when(col("cw") * 2 >= col("tw"), col("v")))
-          .as("wmedian_qty"),
-        min(when(col("cw") * 10 >= col("tw") * 9, col("v")))
-          .as("wp90_qty"),
-        first(col("tw")).as("total_weight_cents"))
-    }),
-
     // Sequential probability ratio test (Wald) monitor — the A/B
     // stopping rule a daily dashboard actually runs: variant B's
     // cumulative conversions test H0: p = 0.30 vs H1: p = 0.35, the
@@ -808,6 +641,14 @@ object OpsAnalytics {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // k-fold cross-validation (the eval loop a training pipeline runs
+    // before committing to a model): 5 deterministic hash-folds over
+    // lineitem, per-fold OLS of extendedprice ~ quantity fit on the
+    // OTHER four folds via closed-form leave-fold-out sums (total sums
+    // minus the fold's own — ONE corpus scan for all five models, a
+    // 5-row join back, then per-row residuals aggregated per
+    // fold). No per-fold re-scan, no MLlib iteration: at 100 TB this
+    // is one pass + one 5-row join regardless of k.
     "q372_kfold_cv" ->
       """WITH rows_ AS (
            SELECT ((l_orderkey * 10 + l_linenumber) % 2147483648
@@ -952,6 +793,13 @@ object OpsAnalytics {
                   range(1, least(10, n_rel) + 1),
                   i -> 1.0 / log2(i + 1))), 4) AS ndcg10
          FROM per_q WHERE n_rel > 0 ORDER BY q_id""",
+    // t-closeness — the third rung of the privacy-gate ladder
+    // (q317 k-anonymity, q361 l-diversity): per quasi-identifier class,
+    // the earth-mover distance between the class's ORDERED sensitive
+    // distribution (acctbal bands) and the global one, EMD computed by
+    // the ordered-attribute closed form sum|cumdiff| / (m-1). The class
+    // x band grid is dimension-sized (25 nations x 5 segments x ~11
+    // bands), so every window runs over bounded rows.
     "q378_t_closeness" ->
       """WITH cust AS (
            SELECT c_nationkey, c_mktsegment,
@@ -1009,6 +857,12 @@ object OpsAnalytics {
          FROM rows_ CROSS JOIN tot
          GROUP BY p_brand, pos_tot, neg_tot
          ORDER BY p_brand""",
+    // Data-contract assertion report — the great-expectations-style
+    // gate an ingest pipeline runs before publishing a table: seven
+    // declarative contracts over lineitem evaluated as one aggregate of
+    // conditional counts, unpivoted to a (contract, checked,
+    // violations, pass) report. One contract is designed to fail
+    // (qty <= 45) so the report provably detects violations.
     "q380_data_contracts" ->
       """WITH agg AS (
            SELECT count(*)::BIGINT AS n,
@@ -1099,6 +953,12 @@ object OpsAnalytics {
                 round(1.0 - vr / vx, 4) AS seasonal_strength
          FROM v JOIN peak USING (event_type)
          ORDER BY event_type""",
+    // Population-stability-index drift — the model-monitoring standard
+    // q210's TVD complements: PSI = sum (p2-p1) ln(p2/p1) over
+    // fixed-width value bins between the observation window's first
+    // and second half, Laplace-smoothed so empty bins stay finite. A
+    // (type x 10 bin) aggregate; PSI > 0.2 is the
+    // retrain-the-model alarm convention.
     "q383_psi_drift" ->
       """WITH binned AS (
            SELECT event_type,
@@ -1337,6 +1197,12 @@ object OpsAnalytics {
                 (covered_tok * 1000000 // n_tok)::BIGINT
                   AS removable_ppm
          FROM segs ORDER BY covered_tok DESC, doc_id LIMIT 20""",
+    // Exact weighted percentiles over a BOUNDED value domain — revenue-
+    // weighted quantity quantiles via the value-grouped cumulative-
+    // weight walk (the domain is the group key, so the cumulative
+    // window runs over <=50 rows regardless of corpus size; unbounded
+    // domains take the ExactSelection refinement instead). All-integer:
+    // weights in cents, thresholds by ceil half/9-tenths comparisons.
     "q393_weighted_percentile" ->
       """WITH byv AS (
            SELECT floor(l_quantity)::BIGINT AS v,
@@ -1573,30 +1439,6 @@ object SysTelemetry {
         .orderBy(col("node"))
     }),
 
-    // SQL:2003 linear-regression aggregate family (REGR_*) + COVAR/
-    // CORR — the standard surface an analyst reaches for before any ML
-    // library (q372's closed-form OLS via the engine's own builtins).
-    // All six REGR_ members plus covariance, rounded identically on
-    // both engines; per-returnflag grouping keeps it one partial-merge
-    // aggregate.
-    "q404_regr_aggregates" -> ((s, d) =>
-      graft.HeavyEngine(s, d).sql(
-        """SELECT l_returnflag,
-                  regr_count(l_extendedprice, l_quantity) AS rn,
-                  round(regr_slope(l_extendedprice, l_quantity), 4)
-                    AS slope,
-                  round(regr_intercept(l_extendedprice, l_quantity), 4)
-                    AS icept,
-                  round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
-                  round(regr_avgx(l_extendedprice, l_quantity), 4)
-                    AS avgx,
-                  round(regr_avgy(l_extendedprice, l_quantity), 4)
-                    AS avgy,
-                  round(covar_pop(l_quantity, l_extendedprice), 4)
-                    AS cov_p,
-                  round(corr(l_quantity, l_extendedprice), 6) AS r
-           FROM lineitem GROUP BY l_returnflag""")),
-
     // SQL:2003 ordered-set aggregates — PERCENTILE_CONT / _DISC with
     // the WITHIN GROUP (ORDER BY ...) syntax, per group: the inverse-
     // distribution functions every SQL dialect spells this way. DuckDB
@@ -1783,6 +1625,12 @@ object SysTelemetry {
          FROM h$HitsIters h JOIN a$HitsIters a ON a.node = h.node
          ORDER BY h.node"""
     },
+    // SQL:2003 linear-regression aggregate family (REGR_*) + COVAR/
+    // CORR — the standard surface an analyst reaches for before any ML
+    // library (q372's closed-form OLS via the engine's own builtins).
+    // All six REGR_ members plus covariance, rounded identically on
+    // both engines; per-returnflag grouping keeps it one partial-merge
+    // aggregate.
     "q404_regr_aggregates" ->
       """SELECT l_returnflag,
                 regr_count(l_extendedprice, l_quantity)::BIGINT AS rn,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.t
@@ -57,44 +57,6 @@ object OpsDiagnostics {
         .limit(TopSkew)
     }),
 
-    // CDC upsert view: entity key = (user_id, event_type); last writer
-    // wins under (ts, event_id). max(struct) carries the winning value
-    // out of the aggregate — no per-key window, map-side combinable.
-    "q293_cdc_latest_compaction" -> ((s, d) => {
-      t(s, d, "events")
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n_versions"),
-          max(struct(col("ts"), col("event_id"), col("value"))).as("w"))
-        .select(col("user_id"), col("event_type"), col("n_versions"),
-          col("w.ts").as("last_ts"), col("w.event_id").as("last_event_id"),
-          col("w.value").as("last_value"))
-    }),
-
-    // Segment overlap matrix: segments = event types; one pass builds
-    // distinct (user, segment) membership, a user-keyed self-join
-    // counts intersections, and singleton sizes broadcast back in.
-    "q294_segment_overlap" -> ((s, d) => {
-      val memb = t(s, d, "events")
-        .select(col("user_id"), col("event_type").as("seg"))
-        .distinct()
-      val sizes = memb.groupBy(col("seg")).agg(count(lit(1)).as("n"))
-      val both = memb.as("a")
-        .join(memb.as("b"),
-          col("a.user_id") === col("b.user_id") &&
-            col("a.seg") < col("b.seg"))
-        .groupBy(col("a.seg").as("seg_a"), col("b.seg").as("seg_b"))
-        .agg(count(lit(1)).as("n_both"))
-      both
-        .join(broadcast(sizes.withColumnRenamed("seg", "seg_a")
-          .withColumnRenamed("n", "n_a")), "seg_a")
-        .join(broadcast(sizes.withColumnRenamed("seg", "seg_b")
-          .withColumnRenamed("n", "n_b")), "seg_b")
-        .select(col("seg_a"), col("seg_b"), col("n_a"), col("n_b"),
-          col("n_both"),
-          round(col("n_both") / (col("n_a") + col("n_b") - col("n_both")), 6)
-            .as("jaccard"))
-    }),
-
     // Event-log integrity audit: per-producer (user) dup-id counts,
     // out-of-order arrivals (event-id order vs event-time order), and
     // the largest silence gap — the ingest-health panel that decides
@@ -117,27 +79,6 @@ object OpsDiagnostics {
             .as("n_out_of_order"),
           max(col("gap_min")).as("max_gap_min"))
         .orderBy(col("user_id")).limit(50)
-    }),
-
-    // k-anonymity audit (Sweeney 2002) over the quasi-identifier
-    // (c_nationkey, c_mktsegment): the governance check before a
-    // dataset release — the k level actually achieved (min group
-    // size), how many groups/rows violate the k=5 policy, and what
-    // survives suppression of the violating groups. One grouped
-    // aggregate + one rollup; exact integers. Sits beside the GDPR
-    // erasure audit (q271) in the release-gate family.
-    "q317_k_anonymity" -> ((s, d) => {
-      val g = t(s, d, "customer")
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("sz"))
-      g.agg(count(lit(1)).as("n_groups"),
-        min(col("sz")).as("k_anonymity"),
-        sum(when(col("sz") < 5, 1L).otherwise(0L))
-          .as("n_violating_groups"),
-        sum(when(col("sz") < 5, col("sz")).otherwise(0L))
-          .as("n_rows_at_risk"),
-        sum(when(col("sz") >= 5, col("sz")).otherwise(0L))
-          .as("n_rows_after_suppression"))
     }),
 
     // Referential-integrity audit: orphan counts for every FK edge of
@@ -250,6 +191,8 @@ object OpsDiagnostics {
                   // (2 * total))::BIGINT AS salt_rec
          FROM counts, stats
          ORDER BY cnt DESC, user_id ASC LIMIT $TopSkew""",
+    // CDC upsert view: entity key = (user_id, event_type); last writer
+    // wins under (ts, event_id).
     "q293_cdc_latest_compaction" ->
       """WITH ranked AS (
            SELECT user_id, event_type, ts::TIMESTAMP AS ts, event_id,
@@ -263,6 +206,9 @@ object OpsDiagnostics {
                 ts AS last_ts, event_id AS last_event_id,
                 value AS last_value
          FROM ranked WHERE rk = 1""",
+    // Segment overlap matrix: segments = event types; one pass builds
+    // distinct (user, segment) membership, a user-keyed self-join
+    // counts intersections, and singleton sizes join back in.
     "q294_segment_overlap" ->
       """WITH memb AS (
            SELECT DISTINCT user_id, event_type AS seg FROM events),
@@ -295,6 +241,13 @@ object OpsDiagnostics {
                   ::BIGINT AS n_out_of_order,
                 max(gap_min)::BIGINT AS max_gap_min
          FROM f GROUP BY user_id ORDER BY user_id LIMIT 50""",
+    // k-anonymity audit (Sweeney 2002) over the quasi-identifier
+    // (c_nationkey, c_mktsegment): the governance check before a
+    // dataset release — the k level actually achieved (min group
+    // size), how many groups/rows violate the k=5 policy, and what
+    // survives suppression of the violating groups. One grouped
+    // aggregate + one global aggregate over it; exact integers. Sits beside the GDPR
+    // erasure audit (q271) in the release-gate family.
     "q317_k_anonymity" ->
       """WITH g AS (
            SELECT c_nationkey, c_mktsegment, count(*) AS sz

@@ -215,35 +215,6 @@ object OpsIntegrity {
           (col("gap_end") - col("gap_start") + 1).as("width"))
     }),
 
-    // l-diversity — the privacy release gate one level past q317's
-    // k-anonymity: a QI class can be large (k-safe) yet expose a
-    // sensitive attribute if it is homogeneous. Per QI class
-    // (nationkey, mktsegment): distinct-l of the sensitive band and
-    // entropy-l (exp of Shannon entropy, rounded 6); the corpus gate =
-    // min over classes + homogeneous-class count. Sensitive attribute =
-    // account-balance band (floor(acctbal/1000)). Two keyed aggregates,
-    // no window.
-    "q361_l_diversity" -> ((s, d) => {
-      val sens = floor(col("c_acctbal") / 1000).cast("long")
-      val cls = t(s, d, "customer")
-        .select(col("c_nationkey"), col("c_mktsegment"),
-          sens.as("band"))
-        .groupBy(col("c_nationkey"), col("c_mktsegment"), col("band"))
-        .agg(count(lit(1)).as("c"))
-      val perClass = cls
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("distinct_l"), sum(col("c")).as("n"),
-          // Shannon entropy of the in-class band distribution.
-          sum(col("c") * log(col("c"))).as("clogc"))
-        .withColumn("entropy_l",
-          round(exp(log(col("n")) - col("clogc") / col("n")), 6))
-      perClass.agg(count(lit(1)).as("n_classes"),
-        min(col("distinct_l")).as("min_distinct_l"),
-        sum(when(col("distinct_l") === 1, 1L).otherwise(0L))
-          .as("n_homogeneous"),
-        round(min(col("entropy_l")), 6).as("min_entropy_l"))
-    }),
-
     // Holt linear (double exponential smoothing) forecast — the
     // level+trend state recursion (l' = α·x + (1−α)(l+b);
     // b' = β(l'−l) + (1−β)b, α=β=½) run as ONE bounded higher-order
@@ -338,6 +309,14 @@ object OpsIntegrity {
   }
 
   val oracles: Seq[(String, String)] = Seq(
+    // l-diversity — the privacy release gate one level past q317's
+    // k-anonymity: a QI class can be large (k-safe) yet expose a
+    // sensitive attribute if it is homogeneous. Per QI class
+    // (nationkey, mktsegment): distinct-l of the sensitive band and
+    // entropy-l (exp of Shannon entropy, rounded 6); the corpus gate =
+    // min over classes + homogeneous-class count. Sensitive attribute =
+    // account-balance band (floor(acctbal/1000)). Two keyed aggregates,
+    // no window.
     "q361_l_diversity" ->
       """WITH cls AS (
            SELECT c_nationkey, c_mktsegment,

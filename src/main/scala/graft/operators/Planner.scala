@@ -976,29 +976,6 @@ object Audits {
         .orderBy(col("month"))
     }),
 
-    // v1 = base minus "late inserts" (key % 13 = 0); v2 = base minus
-    // "deletes" (key % 11 = 0), with key % 7 = 0 rows repriced +1
-    // cent. Full-outer on the key, compare the one mutable field.
-    "q443_snapshot_diff" -> ((s, d) => {
-      val base = t(s, d, "orders").select(col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      val v1 = base.filter(col("k") % 13 =!= 0)
-        .select(col("k"), col("cents").as("c1"))
-      val v2 = base.filter(col("k") % 11 =!= 0)
-        .select(col("k"), (col("cents") +
-          when(col("k") % 7 === 0, 1L).otherwise(0L)).as("c2"))
-      v1.join(v2, Seq("k"), "full_outer")
-        .agg(
-          sum(when(col("c1").isNull, 1L).otherwise(0L)).as("n_added"),
-          sum(when(col("c2").isNull, 1L).otherwise(0L)).as("n_removed"),
-          sum(when(col("c1").isNotNull && col("c2").isNotNull &&
-            col("c1") =!= col("c2"), 1L).otherwise(0L)).as("n_changed"),
-          sum(when(col("c1") === col("c2"), 1L).otherwise(0L))
-            .as("n_unchanged"),
-          sum(when(col("c1").isNotNull && col("c2").isNotNull,
-            col("c2") - col("c1")).otherwise(0L)).as("changed_cents_delta"))
-    }),
-
     // Key-skew profile for two candidate shuffle keys: top-key share,
     // p99 key weight, and the salt factor that levels the heaviest key
     // to the average-partition target (32 partitions).
@@ -1123,6 +1100,9 @@ object Audits {
                 sum(prior_cents)::BIGINT AS sum_prior_cents
          FROM feat GROUP BY month ORDER BY month""",
 
+    // v1 = base minus "late inserts" (key % 13 = 0); v2 = base minus
+    // "deletes" (key % 11 = 0), with key % 7 = 0 rows repriced +1
+    // cent. Full-outer on the key, compare the one mutable field.
     "q443_snapshot_diff" ->
       """WITH base AS (
            SELECT o_orderkey AS k,

@@ -71,36 +71,6 @@ object ProductAnalytics {
       filled.withColumn("observed", coalesce(col("observed"), lit(false)))
     }),
 
-    // Funnel conversion: signup -> view within 7 days -> purchase
-    // within 7 days of that view, per user, each stage anchored at the
-    // EARLIEST qualifying event (min-aggregate semantics, so the result
-    // is order-independent). Three per-user aggregates chained by two
-    // hash joins on user_id; one output row of stage counts + rates.
-    "q261_funnel" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_type"), col("ts"))
-      val s0 = ev.filter(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_signup"))
-      val v0 = ev.filter(col("event_type") === "view").as("v")
-        .join(s0, Seq("user_id"))
-        .filter(col("ts") > col("t_signup") &&
-          col("ts") <= col("t_signup") + expr("interval 7 days"))
-        .groupBy(col("user_id"), col("t_signup"))
-        .agg(min(col("ts")).as("t_view"))
-      val p0 = ev.filter(col("event_type") === "purchase").as("p")
-        .join(v0, Seq("user_id"))
-        .filter(col("ts") > col("t_view") &&
-          col("ts") <= col("t_view") + expr("interval 7 days"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_purchase"))
-      val c1 = s0.agg(count(lit(1)).as("n_signup"))
-      val c2 = v0.agg(count(lit(1)).as("n_view7"))
-      val c3 = p0.agg(count(lit(1)).as("n_purchase7"))
-      c1.crossJoin(c2).crossJoin(c3)
-        .select(col("n_signup"), col("n_view7"), col("n_purchase7"),
-          round(col("n_view7") / col("n_signup"), 4).as("view_rate"),
-          round(col("n_purchase7") / col("n_view7"), 4).as("purchase_rate"))
-    }),
-
     // Cohort retention: cohort = ISO week of the user's first event,
     // activity offset = whole weeks since the cohort week. Two
     // aggregates (first-event per user, then the cohort x offset
@@ -293,50 +263,6 @@ object ProductAnalytics {
         round(varA, 4).as("var_a"), round(varB, 4).as("var_b"),
         round((meanA - meanB) /
           sqrt(varA / col("n_a") + varB / col("n_b")), 4).as("t_stat"))
-    }),
-
-    // Event-transition statistics (first-order Markov): consecutive
-    // event pairs per user ordered by (ts, event_id) — the per-user
-    // LAG window of q20 pointed at path analysis — rolled up to
-    // transition counts and per-source probabilities.
-    "q263_event_transitions" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val pairs = t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val totals = pairs.groupBy(col("prev_type"))
-        .agg(sum(col("n")).as("tot"))
-      pairs.join(totals, Seq("prev_type"))
-        .select(col("prev_type"), col("event_type"), col("n"),
-          round(col("n") / col("tot"), 4).as("p"))
-    }),
-
-    // Volume-anomaly detection: hourly event counts per type, flagged
-    // when a bucket exceeds mean + 3*stddev of its type's distribution.
-    // Counts are integers, so mean/std derive from exact integer sums
-    // (sum, sum-of-squares) and the z-test is one fixed double chain —
-    // the q267 discipline pointed at ops monitoring. Two aggregates
-    // (bucket rollup, per-type moments) + a broadcast join back.
-    "q270_anomaly_hours" -> ((s, d) => {
-      val buckets = t(s, d, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-      val moments = buckets.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("k"), sum(col("n")).as("s"),
-          sum(col("n") * col("n")).as("ss"))
-      val mean = col("s") / col("k")
-      val variance = (col("ss") - col("s") * col("s") / col("k")) /
-        (col("k") - 1)
-      val thr = mean + lit(3.0) * sqrt(variance)
-      buckets.join(broadcast(moments), Seq("event_type"))
-        .filter(col("n") > thr)
-        .select(col("event_type"), col("h"), col("n"),
-          round(mean, 4).as("mean_n"), round(thr, 4).as("threshold"))
     }),
 
     // Right-to-be-forgotten erasure audit: the users selected for
@@ -579,6 +505,12 @@ object ProductAnalytics {
                 round(sum7 / 7.0 / 100.0, 4) AS x_ma7
          FROM feat
          WHERE lag1 IS NOT NULL AND lag7 IS NOT NULL AND n7 = 7""",
+    // Volume-anomaly detection: hourly event counts per type, flagged
+    // when a bucket exceeds mean + 3*stddev of its type's distribution.
+    // Counts are integers, so mean/std derive from exact integer sums
+    // (sum, sum-of-squares) and the z-test is one fixed double chain —
+    // the q267 discipline pointed at ops monitoring. Two aggregates
+    // (bucket rollup, per-type moments) + a join back.
     "q270_anomaly_hours" ->
       """WITH buckets AS (
            SELECT event_type, date_trunc('hour', ts)::TIMESTAMP AS h,
@@ -640,6 +572,11 @@ object ProductAnalytics {
                  CASE WHEN n IS NOT NULL
                       THEN round(sv::DOUBLE / n, 4) END AS filled_avg
           FROM lastv""",
+    // Funnel conversion: signup -> view within 7 days -> purchase
+    // within 7 days of that view, per user, each stage anchored at the
+    // EARLIEST qualifying event (min-aggregate semantics, so the result
+    // is order-independent). Three per-user aggregates chained by two
+    // hash joins on user_id; one output row of stage counts + rates.
     "q261_funnel" ->
       """WITH s0 AS (
            SELECT user_id, min(ts::TIMESTAMP) AS t_signup FROM events
@@ -821,6 +758,10 @@ object ProductAnalytics {
                          + (ss_b - s_b * s_b / n_b) / (n_b - 1) / 10000.0
                            / n_b), 4) AS t_stat
          FROM stats""",
+    // Event-transition statistics (first-order Markov): consecutive
+    // event pairs per user ordered by (ts, event_id) — the per-user
+    // LAG window of q20 pointed at path analysis — rolled up to
+    // transition counts and per-source probabilities.
     "q263_event_transitions" ->
       """WITH seq AS (
            SELECT user_id, event_type,

@@ -54,21 +54,6 @@ object RangeJoin {
           (col("bal1") - col("bal2")).as("gap"))
     }),
 
-    // The same interval join written NAIVELY as abs(x-y) < r — the
-    // GeoRangeJoinRule's 1-D pattern must rewrite it automatically
-    // (PlanSpec pins no nested loop).
-    "q105_num_range_rule" -> ((s, d) => {
-      graft.HeavyEngine(s, d) // installs the optimizer rule
-      val a = t(s, d, "supplier").select(
-        col("s_suppkey").as("s1"), col("s_acctbal").as("bal1"))
-      val b = t(s, d, "supplier").select(
-        col("s_suppkey").as("s2"), col("s_acctbal").as("bal2"))
-      a.join(b, abs(col("bal1") - col("bal2")) < lit(100.0) &&
-          col("s1") < col("s2"))
-        .select(col("s1"), col("s2"),
-          (col("bal1") - col("bal2")).as("gap"))
-    }),
-
     // Exact n-gram Jaccard on a small document slice, NO LSH pruning —
     // the DuckDB-checkable ground truth for the q41 LSH pipeline (same
     // shingle builder; the LSH path must only ever prune, never invent).
@@ -140,6 +125,9 @@ object RangeJoin {
          FROM supplier a JOIN supplier b
            ON a.s_suppkey < b.s_suppkey
           AND abs(a.s_acctbal - b.s_acctbal) < 100.0""",
+    // The same interval join written NAIVELY as abs(x-y) < r — the
+    // GeoRangeJoinRule's 1-D pattern must rewrite it automatically
+    // (PlanSpec pins no nested loop).
     "q105_num_range_rule" ->
       """SELECT a.s_suppkey AS s1, b.s_suppkey AS s2,
                 a.s_acctbal - b.s_acctbal AS gap

@@ -22,237 +22,6 @@ object Relational {
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Seq[(String, Q)] = Seq(
-    // Scan + projection + filter pushdown (RelScan/RelProject/RelFilter).
-    "q01_scan_filter_project" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1995-06-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-    }),
-
-    // BETWEEN + IN-list predicates (InValues, `Analyzer/Analyzer.h:641`).
-    "q02_filter_in_between" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .filter(col("l_quantity").between(5, 15) &&
-          col("l_returnflag").isin("A", "R"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("l_extendedprice")).as("sum_price"))
-    }),
-
-    // TPC-H Q1-style multi-aggregate group-by (GroupByPerfectHash analog,
-    // `QueryEngine/GroupByAndAggregate.cpp:195`).
-    "q03_agg_basic" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          sum(col("l_extendedprice")).as("sum_base_price"),
-          sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("sum_disc_price"),
-          avg(col("l_quantity")).as("avg_qty"),
-          avg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // COUNT(DISTINCT ...) — exact distinct (bitmap/set path in the
-    // reference, `Descriptors/CountDistinctDescriptor.h:39`).
-    "q04_agg_distinct" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_orderkey")).as("n_orders"),
-          countDistinct(col("l_suppkey")).as("n_supp"))
-    }),
-
-    // COUNT_IF / SUM_IF (`Shared/sqldefs.h:87-88`).
-    "q05_agg_conditional" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_linestatus"))
-        .agg(
-          count_if(col("l_discount") > 0.05).as("cnt_hi_disc"),
-          sum(when(col("l_discount") > 0.05, col("l_extendedprice"))
-            .otherwise(lit(0.0))).as("sum_hi_disc"))
-    }),
-
-    // Statistical aggregates — STDDEV_POP/SAMP, VAR_POP/SAMP, CORR,
-    // COVAR_POP/SAMP (reference: `Tests/ExecuteTest.cpp:2111-2189`,
-    // convertlets in `java/calcite/.../StandardConvertletTable.java:232-246`).
-    // Spark's built-ins are single-pass partial-merge aggregates (one
-    // shuffle on the group key, map-side partials) — the same
-    // co-moment streaming shape the reference codegens.
-    "q176_stat_aggs" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          stddev_pop(col("l_quantity")).as("sd_pop_qty"),
-          stddev_samp(col("l_quantity")).as("sd_samp_qty"),
-          var_pop(col("l_quantity")).as("var_pop_qty"),
-          var_samp(col("l_quantity")).as("var_samp_qty"),
-          corr(col("l_quantity"), col("l_extendedprice")).as("corr_qp"),
-          covar_pop(col("l_quantity"), col("l_extendedprice"))
-            .as("covar_pop_qp"),
-          covar_samp(col("l_quantity"), col("l_extendedprice"))
-            .as("covar_samp_qp"))
-    }),
-
-    // ORDER BY + LIMIT with deterministic tie-break → Catalyst
-    // TakeOrderedAndProject (streaming top-k; `QueryEngine/StreamingTopN.cpp`
-    // analog — no full sort at scale).
-    "q06_sort_limit" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
-          col("l_linenumber").asc)
-        .limit(20)
-    }),
-
-    // Multi-way star join, dimensions broadcast (PerfectJoinHashTable
-    // analog, `QueryEngine/JoinHashTable/PerfectJoinHashTable.cpp`).
-    "q07_join_star" -> ((s, d) => {
-      val orders = t(s, d, "orders")
-      val cust = t(s, d, "customer")
-      val nat = broadcast(t(s, d, "nation"))
-      val reg = broadcast(t(s, d, "region"))
-      orders
-        .join(cust, orders("o_custkey") === cust("c_custkey"))
-        .join(nat, cust("c_nationkey") === nat("n_nationkey"))
-        .join(reg, nat("n_regionkey") === reg("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice")).as("revenue"))
-    }),
-
-    // LEFT OUTER JOIN with null-aware counting (JoinType::LEFT).
-    "q08_join_left" -> ((s, d) => {
-      val cust = t(s, d, "customer")
-      val orders = t(s, d, "orders")
-      cust.join(orders, cust("c_custkey") === orders("o_custkey"), "left")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          count(lit(1)).as("n_rows"))
-    }),
-
-    // LEFT SEMI join = EXISTS subquery (JoinType::SEMI; Calcite
-    // decorrelation `HeavyDBParser.java:286` → Catalyst does it natively).
-    "q09_join_semi" -> ((s, d) => {
-      val cust = t(s, d, "customer")
-      val orders = t(s, d, "orders")
-        .filter(col("o_totalprice") > 450000.0)
-      cust.join(orders, cust("c_custkey") === orders("o_custkey"),
-          "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-    }),
-
-    // LEFT ANTI join = NOT EXISTS (JoinType::ANTI).
-    "q10_join_anti" -> ((s, d) => {
-      val cust = t(s, d, "customer")
-      val orders = t(s, d, "orders")
-        .filter(col("o_totalprice") > 450000.0)
-      cust.join(orders, cust("c_custkey") === orders("o_custkey"),
-          "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-    }),
-
-    // Non-equi θ-join → BroadcastNestedLoopJoin (reference loop join,
-    // `QueryEngine/LoopControlFlow/JoinLoop.h:56`, trivial-loop threshold
-    // `Execute.cpp:91`). Only valid for a small build side — as here.
-    "q11_join_theta" -> ((s, d) => {
-      val a = t(s, d, "supplier").select(
-        col("s_suppkey").as("s1"), col("s_acctbal").as("bal1"))
-      val b = t(s, d, "supplier").select(
-        col("s_suppkey").as("s2"), col("s_acctbal").as("bal2"))
-      a.join(b, col("bal1") < col("bal2"))
-        .select(col("s1"), col("s2"))
-    }),
-
-    // ROLLUP — a capability-add beyond the reference (HeavyDB has no
-    // GROUPING SETS/ROLLUP/CUBE: absent from its Calcite config,
-    // SURVEY §2.4); Spark provides them natively, so a user migrating
-    // gains them for free.
-    "q118_rollup" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"))
-    }),
-
-    // INTERSECT / EXCEPT — also free in Spark, absent in the reference
-    // (SURVEY §2.8: UNION ALL only).
-    "q119_setops" -> ((s, d) => {
-      val inOrders = t(s, d, "orders").select(col("o_custkey").as("k"))
-      val allCust = t(s, d, "customer").select(col("c_custkey").as("k"))
-      val both = allCust.intersect(inOrders)
-        .select(col("k"), lit("both").as("src"))
-      val custOnly = allCust.except(inOrders)
-        .select(col("k"), lit("cust_only").as("src"))
-      both.unionAll(custOnly)
-    }),
-
-    // FULL OUTER + CROSS join — capability-adds beyond the reference
-    // (JoinType enum `Shared/sqldefs.h:252-260` has INNER/LEFT/SEMI/ANTI
-    // only; no FULL OUTER, and CROSS only as degenerate loop join).
-    "q144_join_full_cross" -> ((s, d) => {
-      val perCust = t(s, d, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"))
-      val full = t(s, d, "customer")
-        .join(perCust, col("c_custkey") === col("o_custkey"), "full_outer")
-        .agg(count(lit(1)).as("n_all"),
-          count(when(col("o_custkey").isNull, 1)).as("n_cust_only"),
-          count(when(col("c_custkey").isNull, 1)).as("n_ord_only"))
-      val cross = t(s, d, "region").crossJoin(t(s, d, "nation"))
-        .agg(count(lit(1)).as("n_cross"))
-      full.crossJoin(cross) // 1-row × 1-row stat combine
-    }),
-
-    // GROUPING SETS — same capability-add family as q118's ROLLUP
-    // (absent from the reference's Calcite config; native in Spark).
-    "q145_grouping_sets" -> ((s, d) => {
-      val eng = graft.HeavyEngine(s, d)
-      eng.sql("""SELECT coalesce(l_returnflag, '<all>') AS rf,
-                        coalesce(l_linestatus, '<all>') AS ls,
-                        count(*) AS n, sum(l_quantity) AS qty
-                 FROM lineitem
-                 GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                         (l_returnflag), ())""")
-    }),
-
-    // PIVOT — capability-add (no PIVOT in the reference's Calcite
-    // config); Spark's pivot with an explicit value list keeps the
-    // plan a single two-phase aggregate (no distinct-values pre-scan).
-    "q150_pivot" -> ((s, d) => {
-      t(s, d, "events")
-        .groupBy(pmod(col("user_id"), lit(10)).as("bucket"))
-        .pivot("event_type",
-          Seq("click", "view", "purchase", "signup", "error"))
-        .count()
-        .select(col("bucket"),
-          coalesce(col("click"), lit(0L)).as("n_click"),
-          coalesce(col("view"), lit(0L)).as("n_view"),
-          coalesce(col("purchase"), lit(0L)).as("n_purchase"),
-          coalesce(col("signup"), lit(0L)).as("n_signup"),
-          coalesce(col("error"), lit(0L)).as("n_error"))
-    }),
-
-    // UNION ALL (RelLogicalUnion, `QueryEngine/RelAlgDag.h:3136`).
-    "q12_union_all" -> ((s, d) => {
-      val c = t(s, d, "customer")
-        .select(col("c_custkey").as("id"), lit("cust").as("kind"))
-      val su = t(s, d, "supplier")
-        .select(col("s_suppkey").as("id"), lit("supp").as("kind"))
-      c.unionAll(su)
-    }),
-
-    // CASE / arithmetic expression surface (`QueryEngine/CaseIR.cpp`,
-    // `ArithmeticIR.cpp`).
-    "q13_case_arith" -> ((s, d) => {
-      t(s, d, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        when(col("l_discount") > 0.05, lit("HI"))
-          .when(col("l_discount") > 0.02, lit("MID"))
-          .otherwise(lit("LO")).as("disc_band"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
-          (lit(1.0) + col("l_tax"))).as("charged"))
-    }),
-
     // String function surface (`StringOps/StringOps.cpp` — LOWER/UPPER/
     // SUBSTR/LENGTH/REPLACE/CONCAT/LPAD/REVERSE/SPLIT_PART/POSITION).
     "q14_string_funcs" -> ((s, d) => {
@@ -299,58 +68,6 @@ object Relational {
           col("o_orderdate").cast("date")).as("days_to_98"))
     }),
 
-    // date_trunc bucketed group-by — flights/taxi benchmark shape
-    // (`Benchmarks/queries/flights/Q005.sql`, taxis MQ03).
-    "q17_date_bucket_agg" -> ((s, d) => {
-      t(s, d, "orders")
-        .groupBy(date_trunc("month", col("o_orderdate")).as("mon"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice")).as("rev"),
-          avg(col("o_totalprice")).as("avg_rev"))
-    }),
-
-    // GROUP BY + HAVING.
-    "q24_groupby_having" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_suppkey"))
-        .agg(sum(col("l_quantity")).as("total_qty"),
-          count(lit(1)).as("n"))
-        .filter(col("total_qty") > 5000.0)
-    }),
-
-    // SELECT DISTINCT.
-    "q25_distinct" -> ((s, d) => {
-      t(s, d, "orders")
-        .select(col("o_orderstatus"), col("o_orderpriority"))
-        .distinct()
-    }),
-
-    // Uncorrelated scalar subquery (reference executes subqueries first,
-    // `RelAlgExecutor.cpp:774`).
-    "q26_scalar_subquery" -> ((s, d) => {
-      graft.Tables.registerAll(s, d)
-      s.sql("""SELECT o_orderkey, o_totalprice FROM orders
-               WHERE o_totalprice > 2 * (SELECT avg(o_totalprice) FROM orders)""")
-    }),
-
-    // IN subquery → semi join after decorrelation.
-    "q27_in_subquery" -> ((s, d) => {
-      graft.Tables.registerAll(s, d)
-      s.sql("""SELECT c_custkey, c_nationkey FROM customer
-               WHERE c_nationkey IN
-                 (SELECT n_nationkey FROM nation WHERE n_regionkey <= 1)""")
-    }),
-
-    // Correlated scalar subquery (manual decorrelation in the reference,
-    // `HeavyDBParser.java:286-444`; Catalyst DecorrelateInnerQuery).
-    "q28_correlated_subquery" -> ((s, d) => {
-      graft.Tables.registerAll(s, d)
-      s.sql("""SELECT o.o_orderkey, o.o_totalprice FROM orders o
-               WHERE o.o_totalprice >
-                 (SELECT 4 * avg(l.l_extendedprice) FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey)""")
-    }),
-
     // Math function surface (`QueryEngine/ExtensionFunctions.hpp`) incl.
     // WIDTH_BUCKET (`Analyzer/Analyzer.h:1242`).
     "q29_math_funcs" -> ((s, d) => {
@@ -373,27 +90,6 @@ object Relational {
           .as("wb"),
         graft.functions.GraftFunctions.truncate_num(col("l_extendedprice"), 1)
           .as("trunc_v"))
-    }),
-
-    // VALUES list (RelLogicalValues, `QueryEngine/RelAlgDag.h:3038`).
-    "q30_values" -> ((s, d) => {
-      s.sql("""SELECT id, name FROM VALUES
-               (1, 'alpha'), (2, 'beta'), (3, 'gamma') AS v(id, name)""")
-    }),
-
-    // Deterministic MODE (`Shared/sqldefs.h:86`, `QueryEngine/AggMode.h`):
-    // value-count hash map with explicit lowest-value tie-break so the
-    // oracle can reproduce it exactly.
-    "q31_mode" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val counts = t(s, d, "orders")
-        .groupBy(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("cnt").desc, col("o_orderpriority").asc)
-      counts.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("o_orderstatus"), col("o_orderpriority").as("mode_prio"))
     }),
 
     // CAST surface incl. DECIMAL and TRY_CAST (`QueryEngine/CastIR.cpp`;
@@ -424,14 +120,18 @@ object Relational {
     * Spark plans above (driver sorts columns by name before hashing).
     */
   val oracles: Seq[(String, String)] = Seq(
+    // Scan + projection + filter pushdown (RelScan/RelProject/RelFilter).
     "q01_scan_filter_project" ->
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1995-06-01'""",
+    // BETWEEN + IN-list predicates (InValues, `Analyzer/Analyzer.h:641`).
     "q02_filter_in_between" ->
       """SELECT l_returnflag, count(*) AS cnt, sum(l_extendedprice) AS sum_price
          FROM lineitem
          WHERE l_quantity BETWEEN 5 AND 15 AND l_returnflag IN ('A','R')
          GROUP BY l_returnflag""",
+    // TPC-H Q1-style multi-aggregate group-by (GroupByPerfectHash analog,
+    // `QueryEngine/GroupByAndAggregate.cpp:195`).
     "q03_agg_basic" ->
       """SELECT l_returnflag, l_linestatus,
                 sum(l_quantity) AS sum_qty,
@@ -441,11 +141,14 @@ object Relational {
                 avg(l_discount) AS avg_disc,
                 count(*) AS count_order
          FROM lineitem GROUP BY l_returnflag, l_linestatus""",
+    // COUNT(DISTINCT ...) — exact distinct (bitmap/set path in the
+    // reference, `Descriptors/CountDistinctDescriptor.h:39`).
     "q04_agg_distinct" ->
       """SELECT l_returnflag,
                 count(DISTINCT l_orderkey) AS n_orders,
                 count(DISTINCT l_suppkey) AS n_supp
          FROM lineitem GROUP BY l_returnflag""",
+    // COUNT_IF / SUM_IF (`Shared/sqldefs.h:87-88`).
     "q05_agg_conditional" ->
       """SELECT l_linestatus,
                 count(*) FILTER (WHERE l_discount > 0.05) AS cnt_hi_disc,
@@ -453,10 +156,15 @@ object Relational {
                              THEN l_extendedprice ELSE 0.0 END), 0.0)
                   AS sum_hi_disc
          FROM lineitem GROUP BY l_linestatus""",
+    // ORDER BY + LIMIT with deterministic tie-break → Catalyst
+    // TakeOrderedAndProject (streaming top-k; `QueryEngine/StreamingTopN.cpp`
+    // analog — no full sort at scale).
     "q06_sort_limit" ->
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
          ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
          LIMIT 20""",
+    // Multi-way star join, dimensions broadcast (PerfectJoinHashTable
+    // analog, `QueryEngine/JoinHashTable/PerfectJoinHashTable.cpp`).
     "q07_join_star" ->
       """SELECT r_name, count(*) AS n_orders, sum(o_totalprice) AS revenue
          FROM orders
@@ -464,28 +172,42 @@ object Relational {
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
          GROUP BY r_name""",
+    // LEFT OUTER JOIN with null-aware counting (JoinType::LEFT).
     "q08_join_left" ->
       """SELECT c_mktsegment, count(o_orderkey) AS n_orders,
                 count(*) AS n_rows
          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
          GROUP BY c_mktsegment""",
+    // LEFT SEMI join = EXISTS subquery (JoinType::SEMI; Calcite
+    // decorrelation `HeavyDBParser.java:286` → Catalyst does it natively).
     "q09_join_semi" ->
       """SELECT c_custkey, c_name FROM customer
          WHERE EXISTS (SELECT 1 FROM orders
                        WHERE o_custkey = c_custkey
                          AND o_totalprice > 450000.0)""",
+    // LEFT ANTI join = NOT EXISTS (JoinType::ANTI).
     "q10_join_anti" ->
       """SELECT c_custkey, c_name FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders
                            WHERE o_custkey = c_custkey
                              AND o_totalprice > 450000.0)""",
+    // Non-equi θ-join → BroadcastNestedLoopJoin (reference loop join,
+    // `QueryEngine/LoopControlFlow/JoinLoop.h:56`, trivial-loop threshold
+    // `Execute.cpp:91`). Only valid for a small build side — as here.
     "q11_join_theta" ->
       """SELECT a.s_suppkey AS s1, b.s_suppkey AS s2
          FROM supplier a JOIN supplier b ON a.s_acctbal < b.s_acctbal""",
+    // UNION ALL (RelLogicalUnion, `QueryEngine/RelAlgDag.h:3136`).
     "q12_union_all" ->
       """SELECT c_custkey AS id, 'cust' AS kind FROM customer
          UNION ALL
          SELECT s_suppkey AS id, 'supp' AS kind FROM supplier""",
+    // Statistical aggregates — STDDEV_POP/SAMP, VAR_POP/SAMP, CORR,
+    // COVAR_POP/SAMP (reference: `Tests/ExecuteTest.cpp:2111-2189`,
+    // convertlets in `java/calcite/.../StandardConvertletTable.java:232-246`).
+    // Spark's built-ins are single-pass partial-merge aggregates (one
+    // shuffle on the group key, map-side partials) — the same
+    // co-moment streaming shape the reference codegens.
     "q176_stat_aggs" ->
       """SELECT l_returnflag,
                 stddev_pop(l_quantity) AS sd_pop_qty,
@@ -496,10 +218,16 @@ object Relational {
                 covar_pop(l_quantity, l_extendedprice) AS covar_pop_qp,
                 covar_samp(l_quantity, l_extendedprice) AS covar_samp_qp
          FROM lineitem GROUP BY l_returnflag""",
+    // ROLLUP — a capability-add beyond the reference (HeavyDB has no
+    // GROUPING SETS/ROLLUP/CUBE: absent from its Calcite config,
+    // SURVEY §2.4); Spark provides them natively, so a user migrating
+    // gains them for free.
     "q118_rollup" ->
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
                 sum(l_quantity) AS qty
          FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
+    // INTERSECT / EXCEPT — also free in Spark, absent in the reference
+    // (SURVEY §2.8: UNION ALL only).
     "q119_setops" ->
       """SELECT k, 'both' AS src FROM
            (SELECT c_custkey AS k FROM customer
@@ -508,6 +236,9 @@ object Relational {
          SELECT k, 'cust_only' AS src FROM
            (SELECT c_custkey AS k FROM customer
             EXCEPT SELECT o_custkey FROM orders)""",
+    // FULL OUTER + CROSS join — capability-adds beyond the reference
+    // (JoinType enum `Shared/sqldefs.h:252-260` has INNER/LEFT/SEMI/ANTI
+    // only; no FULL OUTER, and CROSS only as degenerate loop join).
     "q144_join_full_cross" ->
       """WITH perc AS (
            SELECT o_custkey, count(*) AS n_orders
@@ -524,6 +255,8 @@ object Relational {
            SELECT count(*) AS n_cross
            FROM region CROSS JOIN nation)
          SELECT * FROM f CROSS JOIN x""",
+    // GROUPING SETS — same capability-add family as q118's ROLLUP
+    // (absent from the reference's Calcite config; native in Spark).
     "q145_grouping_sets" ->
       """SELECT coalesce(l_returnflag, '<all>') AS rf,
                 coalesce(l_linestatus, '<all>') AS ls,
@@ -531,6 +264,9 @@ object Relational {
          FROM lineitem
          GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                                  (l_returnflag), ())""",
+    // PIVOT — capability-add (no PIVOT in the reference's Calcite
+    // config); conditional counts per pivot value keep the plan a
+    // single two-phase aggregate (no distinct-values pre-scan).
     "q150_pivot" ->
       """SELECT user_id % 10 AS bucket,
                 count(CASE WHEN event_type = 'click' THEN 1 END)
@@ -543,6 +279,8 @@ object Relational {
                 count(CASE WHEN event_type = 'error' THEN 1 END)
                   AS n_error
          FROM events GROUP BY user_id % 10""",
+    // CASE / arithmetic expression surface (`QueryEngine/CaseIR.cpp`,
+    // `ArithmeticIR.cpp`).
     "q13_case_arith" ->
       """SELECT l_orderkey, l_linenumber,
                 CASE WHEN l_discount > 0.05 THEN 'HI'
@@ -586,24 +324,33 @@ object Relational {
                 date_diff('day', o_orderdate::DATE, DATE '1998-01-01')::INT
                   AS days_to_98
          FROM orders""",
+    // date_trunc bucketed group-by — flights/taxi benchmark shape
+    // (`Benchmarks/queries/flights/Q005.sql`, taxis MQ03).
     "q17_date_bucket_agg" ->
       """SELECT date_trunc('month', o_orderdate)::TIMESTAMP AS mon,
                 count(*) AS n, sum(o_totalprice) AS rev,
                 avg(o_totalprice) AS avg_rev
          FROM orders GROUP BY 1""",
+    // GROUP BY + HAVING.
     "q24_groupby_having" ->
       """SELECT l_suppkey, sum(l_quantity) AS total_qty, count(*) AS n
          FROM lineitem GROUP BY l_suppkey
          HAVING sum(l_quantity) > 5000.0""",
+    // SELECT DISTINCT.
     "q25_distinct" ->
       "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders",
+    // Uncorrelated scalar subquery (reference executes subqueries first,
+    // `RelAlgExecutor.cpp:774`).
     "q26_scalar_subquery" ->
       """SELECT o_orderkey, o_totalprice FROM orders
          WHERE o_totalprice > 2 * (SELECT avg(o_totalprice) FROM orders)""",
+    // IN subquery → semi join after decorrelation.
     "q27_in_subquery" ->
       """SELECT c_custkey, c_nationkey FROM customer
          WHERE c_nationkey IN
            (SELECT n_nationkey FROM nation WHERE n_regionkey <= 1)""",
+    // Correlated scalar subquery (manual decorrelation in the reference,
+    // `HeavyDBParser.java:286-444`; Catalyst DecorrelateInnerQuery).
     "q28_correlated_subquery" ->
       """SELECT o.o_orderkey, o.o_totalprice FROM orders o
          WHERE o.o_totalprice >
@@ -630,9 +377,13 @@ object Relational {
                  END)::BIGINT AS wb,
                 (floor(l_extendedprice * 10.0) / 10.0)::DOUBLE AS trunc_v
          FROM lineitem""",
+    // VALUES list (RelLogicalValues, `QueryEngine/RelAlgDag.h:3038`).
     "q30_values" ->
       """SELECT * FROM (VALUES (1, 'alpha'), (2, 'beta'), (3, 'gamma'))
          AS v(id, name)""",
+    // Deterministic MODE (`Shared/sqldefs.h:86`, `QueryEngine/AggMode.h`):
+    // value-count hash map with explicit lowest-value tie-break so the
+    // oracle can reproduce it exactly.
     "q31_mode" ->
       """SELECT o_orderstatus, o_orderpriority AS mode_prio FROM (
            SELECT o_orderstatus, o_orderpriority,

@@ -38,13 +38,7 @@ object Scale {
   def main(args: Array[String]): Unit = {
     val (sf001, sf01) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
     val only = sys.env.get("GRAFT_SCALE_ONLY")
     val scales = Seq(
       ("docs_500", sf001, 1),

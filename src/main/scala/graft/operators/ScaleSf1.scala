@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 
@@ -75,13 +75,7 @@ object GenScaled {
       "bytes mode rotates the alphabet per copy: mult > 26 would wrap " +
         "to verbatim duplicates")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
 
     // 64 output files per table, hash-placed on the table's lead key
     // (deterministic row→file map). The union-of-copies plan otherwise
@@ -188,13 +182,7 @@ object ScaleRun {
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
     val bytes = new Bytes(spark.sparkContext)
     val qs = graft.SparkEntry.queries
     names.foreach { name =>

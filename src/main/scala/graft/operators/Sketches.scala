@@ -38,43 +38,6 @@ object Sketches {
 
   val queries: Seq[(String, Q)] = Seq(
 
-    "q493_hdr_histogram" -> ((s, d) => {
-      val buckets = t(s, d, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          floor(col("l_extendedprice") * 100).cast("long").as("cents"))
-        .filter(col("cents") >= 4) // msb>=3 so the 2 sub-bits exist
-        .withColumn("msb", length(bin(col("cents"))).cast("int"))
-        .withColumn("sub",
-          expr("shiftright(cents, msb - 3) & 3").cast("long"))
-        .withColumn("bucket", col("msb") * 4 + col("sub"))
-        // inclusive upper bound of bucket (msb, sub):
-        // ((sub+5) << (msb-3)) - 1, pure integer
-        .withColumn("ub",
-          expr("shiftleft(sub + 5, msb - 3) - 1").cast("long"))
-        .groupBy(col("flag"), col("bucket"))
-        .agg(max(col("ub")).as("ub"), count(lit(1)).as("cnt"))
-      val totals = buckets.groupBy(col("flag"))
-        .agg(sum(col("cnt")).as("n"),
-          count(lit(1)).as("n_buckets"))
-      val wCum = Window.partitionBy(col("flag")).orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // <=64 buckets per flag: the cumulative window is sketch-sized
-      buckets
-        .withColumn("cum", sum(col("cnt")).over(wCum))
-        .join(broadcast(totals), Seq("flag"))
-        .groupBy(col("flag"), col("n"), col("n_buckets"))
-        .agg(
-          min(when(col("cum") * 100 >= col("n") * 50, col("ub")))
-            .as("p50_ub_cents"),
-          min(when(col("cum") * 100 >= col("n") * 90, col("ub")))
-            .as("p90_ub_cents"),
-          min(when(col("cum") * 100 >= col("n") * 99, col("ub")))
-            .as("p99_ub_cents"))
-        .select(col("flag"), col("n"), col("n_buckets"),
-          col("p50_ub_cents"), col("p90_ub_cents"), col("p99_ub_cents"))
-        .orderBy(col("flag"))
-    }),
-
     "q494_max_drawdown" -> ((s, d) => {
       val daily = t(s, d, "events")
         .groupBy(col("event_type"),

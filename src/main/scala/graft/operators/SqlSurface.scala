@@ -174,79 +174,6 @@ object SqlSurface {
                  GROUP BY c.c_mktsegment""")
     }),
 
-    // Modern-dialect parity trio — each runs NATIVELY in both engines
-    // (Spark 4 and DuckDB), so the oracle is the same statement:
-    // GROUP BY ALL (q299), SQL-standard UNPIVOT (q300), correlated
-    // LATERAL join (q301 — the per-row-subquery shape; Spark plans it
-    // as a DomainJoin/rewritten equi-join, never a per-row re-scan).
-    "q299_group_by_all" -> ((s, d) =>
-      HeavyEngine(s, d).sql(
-        """SELECT l_returnflag, l_linestatus,
-                  count(*) AS n, round(sum(l_quantity), 2) AS qty
-           FROM lineitem GROUP BY ALL""")),
-
-    // Measures are computed in DECIMAL before UNPIVOT: o_totalprice is a
-    // 2-decimal quantity stored as a parquet double, so the 10% tax done in
-    // binary lands on a .xx5 half-way point (e.g. 36197.50499…) where Spark
-    // (shortest-repr HALF_UP) and DuckDB (binary round) disagree. Casting to
-    // DECIMAL(18,2) first is unambiguous on both engines, and the decimal
-    // multiply + round are then exact everywhere (same recipe as q32).
-    "q300_unpivot" -> ((s, d) =>
-      HeavyEngine(s, d).sql(
-        """SELECT o_orderkey, metric, CAST(round(val, 2) AS DOUBLE) AS val
-           FROM (SELECT o_orderkey,
-                        CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-                        CAST(o_totalprice AS DECIMAL(18,2)) * CAST(0.1 AS DECIMAL(2,1)) AS tax10
-                 FROM orders WHERE o_orderkey < 200)
-           UNPIVOT (val FOR metric IN (price, tax10))""")),
-
-    "q301_lateral_join" -> ((s, d) =>
-      HeavyEngine(s, d).sql(
-        """SELECT n.n_name, top.o_orderkey, top.o_totalprice
-           FROM nation n
-           JOIN LATERAL (
-             SELECT o.o_orderkey, round(o.o_totalprice, 2) AS o_totalprice
-             FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-             WHERE c.c_nationkey = n.n_nationkey
-             ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 2
-           ) AS top""")),
-
-    // CUBE + GROUPING markers: completes the grouping-extension family
-    // (q118 ROLLUP, q145 GROUPING SETS) with the full 2^k lattice and
-    // the standard disambiguation function — gid distinguishes a
-    // grouped-out dimension from a genuine NULL group value. The gid
-    // bit order is computed explicitly (grouping(a)*2 + grouping(b)) so
-    // both engines agree regardless of their internal grouping_id bit
-    // conventions.
-    "q333_cube_grouping" -> ((s, d) =>
-      HeavyEngine(s, d).sql(
-        """SELECT l_returnflag, l_linestatus,
-                  CAST(grouping(l_returnflag) AS INT) * 2
-                    + CAST(grouping(l_linestatus) AS INT) AS gid,
-                  count(*) AS n,
-                  CAST(sum(l_quantity) AS BIGINT) AS qty
-           FROM lineitem
-           GROUP BY CUBE(l_returnflag, l_linestatus)""")),
-
-    // INTERSECT ALL / EXCEPT ALL — the multiplicity-preserving set ops
-    // q119's DISTINCT forms omit (bag semantics: a row occurring m and
-    // n times survives min(m,n) / max(0,m−n) times). Catalyst plans
-    // both as aggregates over per-side counts — one shuffle each, no
-    // join — which is exactly the scalable bag-set-op plan.
-    "q353_setops_all" -> ((s, d) =>
-      HeavyEngine(s, d).sql(
-        """SELECT x, 'intersect_all' AS op FROM
-             (SELECT l_suppkey % 100 AS x FROM lineitem
-              WHERE l_linenumber = 1
-              INTERSECT ALL
-              SELECT s_suppkey % 100 AS x FROM supplier)
-           UNION ALL
-           SELECT x, 'except_all' AS op FROM
-             (SELECT o_custkey % 50 AS x FROM orders
-              WHERE o_orderkey < 500
-              EXCEPT ALL
-              SELECT c_custkey % 50 AS x FROM customer)""")),
-
     // MapType surface: JSON props parsed to MAP<STRING,BIGINT>,
     // augmented via map_concat, then map_keys / element_at /
     // map_filter with a (k, v) lambda — all codegen'd. The oracle
@@ -263,19 +190,6 @@ object SqlSurface {
                         map_concat(from_json(props, 'map<string,bigint>'),
                                    map('uid', user_id)) AS m
                  FROM events)""")),
-
-    // Bitwise + boolean aggregates (BIT_AND/OR/XOR, BOOL_AND/OR) —
-    // the §2.4 aggregate-kind tail: permission-mask folding and
-    // predicate rollups, exact integer/boolean on both engines.
-    "q355_bitwise_aggs" -> ((s, d) =>
-      HeavyEngine(s, d).sql(
-        """SELECT event_type,
-                  bit_and(event_id) AS band,
-                  bit_or(event_id) AS bor,
-                  bit_xor(event_id) AS bxor,
-                  bool_and(value > 0) AS all_pos,
-                  bool_or(value > 8) AS any_big
-           FROM events GROUP BY event_type""")),
 
     // STRING_AGG / LISTAGG parity (ordered string aggregation): Spark
     // expresses it as concat_ws over sort_array(collect_list(..)) — the
@@ -295,10 +209,21 @@ object SqlSurface {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // Modern-dialect parity trio — each runs NATIVELY in both engines
+    // (Spark 4 and DuckDB), so the oracle is the same statement:
+    // GROUP BY ALL (q299), SQL-standard UNPIVOT (q300), correlated
+    // LATERAL join (q301 — the per-row-subquery shape; Spark plans it
+    // as a DomainJoin/rewritten equi-join, never a per-row re-scan).
     "q299_group_by_all" ->
       """SELECT l_returnflag, l_linestatus,
               count(*)::BIGINT AS n, round(sum(l_quantity), 2) AS qty
          FROM lineitem GROUP BY ALL""",
+    // Measures are computed in DECIMAL before UNPIVOT: o_totalprice is a
+    // 2-decimal quantity stored as a parquet double, so the 10% tax done in
+    // binary lands on a .xx5 half-way point (e.g. 36197.50499…) where Spark
+    // (shortest-repr HALF_UP) and DuckDB (binary round) disagree. Casting to
+    // DECIMAL(18,2) first is unambiguous on both engines, and the decimal
+    // multiply + round are then exact everywhere (same recipe as q32).
     "q300_unpivot" ->
       """SELECT o_orderkey, metric, CAST(round(val, 2) AS DOUBLE) AS val
          FROM (SELECT o_orderkey,
@@ -420,6 +345,13 @@ object SqlSurface {
                FROM orders WHERE o_totalprice > 100000) v
          JOIN customer c ON c.c_custkey = v.o_custkey
          GROUP BY c.c_mktsegment""",
+    // CUBE + GROUPING markers: completes the grouping-extension family
+    // (q118 ROLLUP, q145 GROUPING SETS) with the full 2^k lattice and
+    // the standard disambiguation function — gid distinguishes a
+    // grouped-out dimension from a genuine NULL group value. The gid
+    // bit order is computed explicitly (grouping(a)*2 + grouping(b)) so
+    // both engines agree regardless of their internal grouping_id bit
+    // conventions.
     "q333_cube_grouping" ->
       """SELECT l_returnflag, l_linestatus,
                 (GROUPING(l_returnflag) * 2
@@ -435,6 +367,11 @@ object SqlSurface {
                 count(*)::BIGINT AS n
          FROM orders WHERE o_custkey < 100
          GROUP BY o_custkey""",
+    // INTERSECT ALL / EXCEPT ALL — the multiplicity-preserving set ops
+    // q119's DISTINCT forms omit (bag semantics: a row occurring m and
+    // n times survives min(m,n) / max(0,m−n) times). Catalyst plans
+    // both as aggregates over per-side counts — one shuffle each, no
+    // join — which is exactly the scalable bag-set-op plan.
     "q353_setops_all" ->
       """SELECT x, 'intersect_all' AS op FROM
            (SELECT l_suppkey % 100 AS x FROM lineitem
@@ -455,6 +392,9 @@ object SqlSurface {
                 ((json_extract(props, '$.k')::BIGINT > 50)::INT
                  + (user_id > 50)::INT)::INT AS n_big
          FROM events""",
+    // Bitwise + boolean aggregates (BIT_AND/OR/XOR, BOOL_AND/OR) —
+    // the §2.4 aggregate-kind tail: permission-mask folding and
+    // predicate rollups, exact integer/boolean on both engines.
     "q355_bitwise_aggs" ->
       """SELECT event_type,
                 bit_and(event_id)::BIGINT AS band,

@@ -19,53 +19,6 @@ object SyntheticParity {
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Seq[(String, Q)] = Seq(
-    // PerfectHashSingleCol: dense small-range int key.
-    "q130_syn_perfect_hash" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy(col("l_linenumber"))
-        .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"))),
-
-    // PerfectHashMultiCol: composite dense key.
-    "q131_syn_perfect_multi" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .groupBy(col("l_linenumber"), col("l_returnflag"))
-        .agg(count(lit(1)).as("n"))),
-
-    // BaselineHash: sparse wide key (high-cardinality long).
-    "q132_syn_baseline_hash" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .groupBy((col("l_orderkey") * 1000000L + col("l_partkey"))
-          .as("wide_key"))
-        .agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("n_groups"),
-          sum(col("n")).as("n_rows"))),
-
-    // NonGroupedAgg: global aggregate, no keys.
-    "q133_syn_nongrouped" -> ((s, d) =>
-      t(s, d, "lineitem").agg(
-        count(lit(1)).as("n"),
-        sum(col("l_extendedprice")).as("total"),
-        min(col("l_shipdate")).as("first_ship"),
-        max(col("l_shipdate")).as("last_ship"))),
-
-    // Sort: full ordering + limit (TakeOrderedAndProject).
-    "q134_syn_sort" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
-          col("l_linenumber").asc)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice"))
-        .limit(100)),
-
-    // MultiStep: agg → join → agg chain.
-    "q135_syn_multistep" -> ((s, d) => {
-      val perOrder = t(s, d, "lineitem").groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).as("qty"))
-      perOrder.join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), avg(col("qty")).as("avg_qty"))
-    }),
-
     // RANGE frame over a time axis (interval window): 7-day trailing
     // sum per supplier — RANGE BETWEEN INTERVAL bounds expressed on the
     // epoch-seconds axis (Spark rangeBetween is numeric).
@@ -81,27 +34,33 @@ object SyntheticParity {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // PerfectHashSingleCol: dense small-range int key.
     "q130_syn_perfect_hash" ->
       """SELECT l_linenumber, count(*) AS n, sum(l_quantity) AS qty
          FROM lineitem GROUP BY 1""",
+    // PerfectHashMultiCol: composite dense key.
     "q131_syn_perfect_multi" ->
       """SELECT l_linenumber, l_returnflag, count(*) AS n
          FROM lineitem GROUP BY 1, 2""",
+    // BaselineHash: sparse wide key (high-cardinality long).
     "q132_syn_baseline_hash" ->
       """SELECT count(*) AS n_groups, sum(n)::BIGINT AS n_rows FROM
            (SELECT l_orderkey * 1000000 + l_partkey AS wide_key,
                    count(*) AS n
             FROM lineitem GROUP BY 1)""",
+    // NonGroupedAgg: global aggregate, no keys.
     "q133_syn_nongrouped" ->
       """SELECT count(*) AS n, sum(l_extendedprice) AS total,
                 min(l_shipdate)::TIMESTAMP AS first_ship,
                 max(l_shipdate)::TIMESTAMP AS last_ship
          FROM lineitem""",
+    // Sort: full ordering + limit (TakeOrderedAndProject).
     "q134_syn_sort" ->
       """SELECT l_orderkey, l_linenumber, l_extendedprice
          FROM lineitem
          ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
          LIMIT 100""",
+    // MultiStep: agg → join → agg chain.
     "q135_syn_multistep" ->
       """WITH per_order AS (
            SELECT l_orderkey, sum(l_quantity) AS qty

@@ -397,33 +397,6 @@ object TableFunctions {
         (count_distinct(col("rs")) === count(lit(1))).as("all_distinct"))
     }),
 
-    // tf_feature_similarity analog: users as event_type count vectors,
-    // pairwise cosine via a join on the shared feature key (sparse dot
-    // product — never materializes dense vectors).
-    "q54_feature_similarity" -> ((s, d) => {
-      val counts = events(s, d)
-        .filter(col("user_id") < 30)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).cast("double").as("c"))
-      val norms = counts.groupBy(col("user_id"))
-        .agg(sqrt(sum(col("c") * col("c"))).as("nrm"))
-      val a = counts.select(col("user_id").as("u1"),
-        col("event_type"), col("c").as("c1"))
-      val b = counts.select(col("user_id").as("u2"),
-        col("event_type"), col("c").as("c2"))
-      val dots = a.join(b, "event_type")
-        .filter(col("u1") < col("u2"))
-        .groupBy(col("u1"), col("u2"))
-        .agg(sum(col("c1") * col("c2")).as("dot"))
-      dots
-        .join(norms.select(col("user_id").as("u1"), col("nrm").as("n1")),
-          "u1")
-        .join(norms.select(col("user_id").as("u2"), col("nrm").as("n2")),
-          "u2")
-        .select(col("u1"), col("u2"),
-          (col("dot") / (col("n1") * col("n2"))).as("cos_sim"))
-    }),
-
     // tf_feature_similarity with use_tf_idf=true (reference
     // `SimilarityTableFunctions.hpp:165`; weighting
     // `TableFunctionsMatrix.hpp:403` idf_normalize: idf(k) =
@@ -460,37 +433,6 @@ object TableFunctions {
           "u1")
         .join(norms.select(col("user_id").as("u2"), col("nrm").as("n2")),
           "u2")
-        .select(col("u1"), col("u2"),
-          (col("dot") / (col("n1") * col("n2"))).as("cos_sim"))
-    }),
-
-    // tf_feature_similarity two-cursor signature
-    // (`SimilarityTableFunctions.hpp:162`: primary cursor vs a SEPARATE
-    // comparison cursor — q54 covers the one-cursor self-similarity
-    // signature at :324). Primary = even users, comparison = odd users
-    // (both cursors non-empty at every sf); cosine over event-type
-    // count vectors; sparse-key join on the shared feature space, no
-    // dense matrix.
-    "q184_feature_similarity_cross" -> ((s, d) => {
-      val counts = events(s, d)
-        .filter(col("user_id") < 30)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).cast("double").as("c"))
-      val norms = counts.groupBy(col("user_id"))
-        .agg(sqrt(sum(col("c") * col("c"))).as("nrm"))
-      val prim = counts.filter(col("user_id") % 2 === 0)
-        .select(col("user_id").as("u1"), col("event_type"),
-          col("c").as("c1"))
-      val comp = counts.filter(col("user_id") % 2 === 1)
-        .select(col("user_id").as("u2"), col("event_type"),
-          col("c").as("c2"))
-      prim.join(comp, "event_type")
-        .groupBy(col("u1"), col("u2"))
-        .agg(sum(col("c1") * col("c2")).as("dot"))
-        .join(norms.select(col("user_id").as("u1"),
-          col("nrm").as("n1")), "u1")
-        .join(norms.select(col("user_id").as("u2"),
-          col("nrm").as("n2")), "u2")
         .select(col("u1"), col("u2"),
           (col("dot") / (col("n1") * col("n2"))).as("cos_sim"))
     }),
@@ -676,6 +618,13 @@ object TableFunctions {
 
   val oracles: Seq[(String, String)] = Seq(
     "q181_slope_path" -> slopePathOracle,
+    // tf_feature_similarity two-cursor signature
+    // (`SimilarityTableFunctions.hpp:162`: primary cursor vs a SEPARATE
+    // comparison cursor — q54 covers the one-cursor self-similarity
+    // signature at :324). Primary = even users, comparison = odd users
+    // (both cursors non-empty at every sf); cosine over event-type
+    // count vectors; sparse-key join on the shared feature space, no
+    // dense matrix.
     "q184_feature_similarity_cross" ->
       """WITH counts AS (
            SELECT user_id, event_type, count(*)::DOUBLE AS c
@@ -800,6 +749,9 @@ object TableFunctions {
          FROM p GROUP BY 1, 2""",
     "q100_random_strings" ->
       """SELECT 1000::BIGINT AS n, true AS len_ok, true AS all_distinct""",
+    // tf_feature_similarity analog: users as event_type count vectors,
+    // pairwise cosine via a join on the shared feature key (sparse dot
+    // product — never materializes dense vectors).
     "q54_feature_similarity" ->
       """WITH counts AS (
            SELECT user_id, event_type, count(*)::DOUBLE AS c

@@ -16,57 +16,7 @@ object TaxiParity {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def ev(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events").select(
-      col("event_type"),
-      (col("user_id") % 10).as("pc"),
-      year(col("ts")).as("yr"),
-      col("value"))
-
   val queries: Seq[(String, Q)] = Seq(
-    // MQ01: count by type.
-    "q110_taxi_mq01" -> ((s, d) =>
-      ev(s, d).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))),
-
-    // MQ02: avg(amount) by passenger_count.
-    "q111_taxi_mq02" -> ((s, d) =>
-      ev(s, d).groupBy(col("pc"))
-        .agg(avg(col("value")).as("avg_value"))),
-
-    // MQ03: count by (passenger_count, year).
-    "q112_taxi_mq03" -> ((s, d) =>
-      ev(s, d).groupBy(col("pc"), col("yr"))
-        .agg(count(lit(1)).as("n"))),
-
-    // MQ04: count by (passenger_count, year, integer distance), ordered.
-    "q113_taxi_mq04" -> ((s, d) =>
-      ev(s, d)
-        .groupBy(col("pc"), col("yr"),
-          floor(col("value")).cast("long").as("dist"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("pc"), col("yr"), col("dist"))),
-
-    // MQ05: deterministic pseudo-sample via the Knuth multiplicative
-    // hash on the stable row id (`MOD(MOD(rowid, 2^32)*2654435761,
-    // 2^32) < T`, the reference's literal formula with its own
-    // threshold constant ~1.17%), under a bbox-style range predicate
-    // (value band stands in for the dropoff box). The multiply is
-    // 16-bit-split (2654435761 = 40503*65536 + 31153) so the mod-2^32
-    // product never exceeds signed-64-bit range — a naive a*2654435761
-    // overflows for a > ~3.47e9, which real 100 TB row ids reach
-    // (Spark would wrap silently, DuckDB would abort). Pure integer
-    // math — the oracle replays the sample bit-for-bit.
-    "q277_taxi_mq05_rowid_sample" -> ((s, d) => {
-      val a = col("event_id") % 4294967296L
-      val knuth = ((a * 40503L % 4294967296L) * 65536L +
-        a * 31153L) % 4294967296L
-      t(s, d, "events")
-        .filter(knuth < 50391620L &&
-          col("value") >= 20.0 && col("value") <= 40.0)
-        .agg(count(lit(1)).as("n"))
-    }),
-
     // MQ06: SAMPLE_RATIO(r) + the same predicate. Production maps
     // SAMPLE_RATIO to the registered macro (xxhash64-keyed, q59); the
     // parity gate uses the engine-portable md5 hash at the same ratio
@@ -80,19 +30,33 @@ object TaxiParity {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // MQ01: count by type.
     "q110_taxi_mq01" ->
       """SELECT event_type, count(*) AS n FROM events GROUP BY 1""",
+    // MQ02: avg(amount) by passenger_count.
     "q111_taxi_mq02" ->
       """SELECT user_id % 10 AS pc, avg(value) AS avg_value
          FROM events GROUP BY 1""",
+    // MQ03: count by (passenger_count, year).
     "q112_taxi_mq03" ->
       """SELECT user_id % 10 AS pc, year(ts::TIMESTAMP)::INT AS yr,
                 count(*) AS n
          FROM events GROUP BY 1, 2""",
+    // MQ04: count by (passenger_count, year, integer distance), ordered.
     "q113_taxi_mq04" ->
       """SELECT user_id % 10 AS pc, year(ts::TIMESTAMP)::INT AS yr,
                 floor(value)::BIGINT AS dist, count(*) AS n
          FROM events GROUP BY 1, 2, 3""",
+    // MQ05: deterministic pseudo-sample via the Knuth multiplicative
+    // hash on the stable row id (`MOD(MOD(rowid, 2^32)*2654435761,
+    // 2^32) < T`, the reference's literal formula with its own
+    // threshold constant ~1.17%), under a bbox-style range predicate
+    // (value band stands in for the dropoff box). The multiply is
+    // 16-bit-split (2654435761 = 40503*65536 + 31153) so the mod-2^32
+    // product never exceeds signed-64-bit range — a naive a*2654435761
+    // overflows for a > ~3.47e9, which real 100 TB row ids reach
+    // (Spark would wrap silently, DuckDB would abort). Pure integer
+    // math — the oracle replays the sample bit-for-bit.
     "q277_taxi_mq05_rowid_sample" ->
       """SELECT count(*) AS n FROM events
          WHERE ((event_id % 4294967296) * 40503 % 4294967296 * 65536

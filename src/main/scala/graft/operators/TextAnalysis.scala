@@ -403,31 +403,6 @@ object TextAnalysis {
           .as("redacted_md5"))
     }),
 
-    // Deterministic train/val/test split — dataset mixing for training
-    // pipelines. The hash is Knuth multiplicative on the doc id (pure
-    // integer arithmetic, ENGINE-INDEPENDENT — unlike xxhash64), so the
-    // assignment is exactly reproducible anywhere, stable under
-    // repartitioning, and the oracle recomputes it exactly. 80/10/10.
-    // The id is masked to its low 31 bits BEFORE multiplying: the raw
-    // product overflows int64 for doc_id >= ~3.5e9, where Spark wraps
-    // silently (negative h) but DuckDB traps — the same divergence the
-    // minhash permutations split into 30-bit halves to avoid. Masked,
-    // max product is (2^31-1) * 2654435761 < 2^63 in both engines.
-    "q168_dataset_split" -> ((s, d) => {
-      val h = (col("doc_id").bitwiseAND(lit(2147483647L)) *
-        lit(2654435761L)) % lit(4294967296L)
-      val bucket = h % 100
-      t(s, d, "documents").select(col("doc_id"),
-        when(bucket < 80, "train").when(bucket < 90, "val")
-          .otherwise("test").as("split"))
-        .groupBy(col("split"))
-        // Explicit BIGINT pins on both sides: DuckDB's sum() widens to
-        // HUGEINT (int128) which hash-canonicalizes differently from
-        // Spark's int64 even when values are identical (round-4 red row).
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("doc_id")).cast("long").as("id_sum"))
-    }),
-
     // Domain-mixture rebalancing — the dataset-mixing step of a training
     // pipeline: per-domain acceptance rates (here: down-sample every
     // lang to the minority lang's volume) applied via the same
@@ -1003,34 +978,6 @@ object TextAnalysis {
           md5(concat_ws(" ", col("ck"))).as("chunk_hash"))
     }),
 
-    // Temperature-weighted domain mixture (the standard multilingual /
-    // multi-domain LLM mixing rule: sample domain i proportional to
-    // p_i^alpha, alpha = 1/T — XLM-R/mT5-style exponent sampling; q183
-    // is the T→inf full-equalization special case). alpha = 0.5 keeps
-    // the math on sqrt, which IEEE-754 rounds correctly in BOTH engines
-    // (a general pow() would not be bit-portable), so acceptance rate
-    // sqrt(n_min/n_i) — normalized to 1 at the rarest domain — is
-    // engine-identical and the portable-hash accept test replays
-    // exactly. Same scale shape as q183: broadcast domain dim, one
-    // corpus scan, no corpus shuffle before the rollup.
-    "q197_temperature_mixture" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"))
-      val langN = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_in"))
-      val rates = langN
-        .crossJoin(broadcast(langN.agg(min(col("n_in")).as("min_n"))))
-        .withColumn("rate",
-          sqrt(col("min_n").cast("double") / col("n_in")))
-        .drop("min_n")
-      val h = (col("doc_id").bitwiseAND(lit(2147483647L)) *
-        lit(2654435761L)) % lit(4294967296L)
-      docs.join(broadcast(rates), Seq("lang"))
-        .filter(h.cast("double") < col("rate") * lit(4294967296.0))
-        .groupBy(col("lang"))
-        .agg(first(col("n_in")).as("n_in"),
-          count(lit(1)).cast("long").as("n_sampled"),
-          sum(col("doc_id")).cast("long").as("id_sum"))
-    }),
-
     // CAPSTONE: the whole curation pipeline as ONE DataFrame program —
     // language ID (q45) → quality + fingerprint (q142) → exact-dedup
     // canonical → keep decision → deterministic split (q168) →
@@ -1433,6 +1380,16 @@ object TextAnalysis {
                   '(\+1[-. ]?)?(\(\d{3}\) ?|\b\d{3}[-. ])\d{3}[-. ]\d{4}\b', '<PHONE>', 'g'))
                   AS redacted_md5
          FROM docs""",
+    // Deterministic train/val/test split — dataset mixing for training
+    // pipelines. The hash is Knuth multiplicative on the doc id (pure
+    // integer arithmetic, ENGINE-INDEPENDENT — unlike xxhash64), so the
+    // assignment is exactly reproducible anywhere, stable under
+    // repartitioning, and the oracle recomputes it exactly. 80/10/10.
+    // The id is masked to its low 31 bits BEFORE multiplying: the raw
+    // product overflows int64 for doc_id >= ~3.5e9, where Spark wraps
+    // silently (negative h) but DuckDB traps — the same divergence the
+    // minhash permutations split into 30-bit halves to avoid. Masked,
+    // max product is (2^31-1) * 2654435761 < 2^63 in both engines.
     "q168_dataset_split" ->
       """WITH b AS (
            SELECT doc_id,
@@ -1556,6 +1513,15 @@ object TextAnalysis {
                 len(ck)::BIGINT AS n_tok,
                 md5(array_to_string(ck, ' ')) AS chunk_hash
          FROM chunks""",
+    // Temperature-weighted domain mixture (the standard multilingual /
+    // multi-domain LLM mixing rule: sample domain i proportional to
+    // p_i^alpha, alpha = 1/T — XLM-R/mT5-style exponent sampling; q183
+    // is the T→inf full-equalization special case). alpha = 0.5 keeps
+    // the math on sqrt, which IEEE-754 rounds correctly in BOTH engines
+    // (a general pow() would not be bit-portable), so acceptance rate
+    // sqrt(n_min/n_i) — normalized to 1 at the rarest domain — is
+    // engine-identical and the portable-hash accept test replays
+    // exactly.
     "q197_temperature_mixture" ->
       """WITH c AS (
            SELECT lang, count(*)::BIGINT AS n_in

@@ -27,17 +27,6 @@ object Windows {
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Seq[(String, Q)] = Seq(
-    // Ranking family over per-customer order history.
-    "q18_window_rank" -> ((s, d) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, d, "orders").select(
-        col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        row_number().over(w).as("rn"),
-        rank().over(w).as("rk"),
-        dense_rank().over(w).as("drk"))
-    }),
-
     // Framed aggregates: running sum (ROWS), moving avg (ROWS 2 PRECEDING),
     // RANGE frame over a numeric ordering, framed min/max/count.
     "q19_window_frames" -> ((s, d) => {
@@ -94,24 +83,6 @@ object Windows {
         col("event_id"), col("user_id"), col("v"),
         last(col("v"), ignoreNulls = true).over(wAsc).as("ffill"),
         last(col("v"), ignoreNulls = true).over(wDesc).as("bfill"))
-    }),
-
-    // CONDITIONAL_CHANGE_EVENT (`Shared/sqldefs.h:143-195`): running count
-    // of changes of event_type per user — lag + running sum rewrite.
-    "q22_window_cce" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      val withChange = t(s, d, "events").select(
-        col("event_id"), col("user_id"), col("ts"), col("event_type"))
-        .withColumn("changed",
-          when(lag(col("event_type"), 1).over(w).isNull, lit(0L))
-            .when(lag(col("event_type"), 1).over(w) =!= col("event_type"),
-              lit(1L))
-            .otherwise(lit(0L)))
-      withChange.select(
-        col("event_id"), col("user_id"),
-        sum(col("changed"))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)).as("cce"))
     }),
 
     // NTILE / PERCENT_RANK / CUME_DIST + windowed COUNT_IF/SUM_IF
@@ -193,6 +164,7 @@ object Windows {
   )
 
   val oracles: Seq[(String, String)] = Seq(
+    // Ranking family over per-customer order history.
     "q18_window_rank" ->
       """SELECT o_custkey, o_orderkey, o_totalprice,
                 CAST(row_number() OVER w AS INT) AS rn,
@@ -247,6 +219,8 @@ object Windows {
                   ORDER BY ts::TIMESTAMP DESC, event_id DESC
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bfill
          FROM base""",
+    // CONDITIONAL_CHANGE_EVENT (`Shared/sqldefs.h:143-195`): running count
+    // of changes of event_type per user — lag + running sum rewrite.
     "q22_window_cce" ->
       """WITH chg AS (
            SELECT event_id, user_id, ts,

@@ -142,13 +142,3 @@ case class GeoRangeJoinRule(spark: SparkSession)
     }
   }
 }
-
-object GeoRangeJoinRule {
-  /** Idempotently install the rule on a session. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[GeoRangeJoinRule]))
-      spark.experimental.extraOptimizations =
-        existing :+ GeoRangeJoinRule(spark)
-  }
-}

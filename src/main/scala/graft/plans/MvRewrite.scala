@@ -649,11 +649,4 @@ object MvRewrite {
         newChild)
     }
   }
-
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[MvRewriteRule]))
-      spark.experimental.extraOptimizations =
-        existing :+ MvRewriteRule(spark)
-  }
 }

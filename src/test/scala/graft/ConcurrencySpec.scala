@@ -47,4 +47,28 @@ class ConcurrencySpec extends AnyFunSuite {
       case (i, s0) => assert(s0 == (i + 1) + (i * 10 + 1).toLong)
     }
   }
+
+  test("concurrent first engine construction on a fresh session sets it " +
+    "up once and before any SQL runs") {
+    val fresh = spark.newSession()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val futures = (1 to 8).map { _ =>
+      Future {
+        go.await()
+        HeavyEngine(fresh, sf).sql(
+          """SELECT quarterday(TIMESTAMP '2024-05-01 13:00:00') AS qd,
+                    st_area(st_geomfromtext(
+                      'POLYGON ((0 0, 2 0, 2 1, 0 1, 0 0))')) AS area""")
+          .collect().head
+      }
+    }
+    go.countDown()
+    Await.result(Future.sequence(futures), 300.seconds).foreach { r =>
+      assert(r.getInt(0) == 3 && r.getDouble(1) == 2.0, s"row $r")
+    }
+    val rules = fresh.experimental.extraOptimizations
+    assert(rules.count(_.isInstanceOf[plans.GeoRangeJoinRule]) == 1, rules)
+    assert(rules.count(_.isInstanceOf[plans.MvRewrite.MvRewriteRule]) == 1,
+      rules)
+  }
 }

@@ -6,18 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session + fixture helpers for all specs. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Stage.scratchDir("warehouse"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    LocalSession("4", extra = Map("spark.app.name" -> "graft-test"))
 }
 
 class EntrySpec extends AnyFunSuite {
@@ -32,6 +22,18 @@ class EntrySpec extends AnyFunSuite {
     val qs = SparkEntry.queries.keySet
     val orphans = SparkEntry.oracleSql.keySet.diff(qs)
     assert(orphans.isEmpty, s"oracle without query: $orphans")
+  }
+
+  test("the registered inventory stays at the same 580 names") {
+    // A mistyped oracle key would add a query; a deleted body with no
+    // oracle text would drop one. The digest is the MD5 of the sorted
+    // names joined by newlines.
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size == 580)
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(names.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(md5 == "bc14f1fedcec1171530470f99480003c")
   }
 
   test("all queries execute and return non-empty results at sf0.001") {
